@@ -250,8 +250,9 @@ def main() -> None:
     # link graph PLUS a pathological LONG PATH component (a 4096-node
     # chain in an id range above the docs) — the worst case for
     # label-propagation-style algorithms (O(diameter) rounds); star
-    # contraction must stay O(log^2 n).  Rounds-to-convergence is
-    # recorded, not just wall time.
+    # contraction must stay O(log^2 n) and the driver-side union-find
+    # O(log n) numpy passes.  Distributed rounds are recorded, not just
+    # wall time (0 while the graph fits graph.LOCAL_CC_MAX_EDGES).
     from geotile import graph
 
     docs_ids = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id")

@@ -2219,8 +2219,13 @@ def cell_blobs(df: DataFrame, lat: str = "lat", lon: str = "lon",
     by the grid, not the data — <= 2.6k cells at 5 degrees, ~1M at
     0.25).  Adjacency is an equi-join on shifted integer keys (never a
     theta join), and the component resolution is
-    :func:`geotile.graph.connected_components` (large-star/small-star,
-    O(log^2 n) rounds over a shrinking edge set)."""
+    :func:`geotile.graph.connected_components`: an edge set at or under
+    ``graph.LOCAL_CC_MAX_EDGES`` (a fully occupied 1-degree grid has
+    ~260k adjacency edges) is
+    collected once and resolved by a numpy union-find on the driver, so
+    the hotspot map costs a handful of Spark jobs, not one batch per
+    contraction round; larger edge sets run large-star/small-star
+    rounds (O(log^2 n) over a shrinking edge set) until they fit."""
     from . import cache, graph
 
     ny = int(math.ceil(180.0 / cell_deg))
@@ -2709,9 +2714,13 @@ def blob_threshold_profile(df: DataFrame, thresholds: Sequence[int],
 
     Scale shape: the data-sized rasterizing groupBy runs ONCE and is
     persisted; each rung filters the occupied-cell frame (grid-
-    bounded, <= 2.6k cells at 5 degrees) and runs the large-star/
-    small-star contraction on a SHRINKING cell set — the per-rung
-    cost is occupied-cells-sized, never data-sized."""
+    bounded, <= 2.6k cells at 5 degrees) and resolves its components
+    with :func:`geotile.graph.connected_components`, which collects an
+    adjacency graph this small once and finishes it on the driver
+    (distributed large-star/small-star rounds only above
+    ``graph.LOCAL_CC_MAX_EDGES`` edges) — the per-rung cost is a few
+    occupied-cells-sized jobs, never data-sized and never one batch
+    per contraction round."""
     from . import cache, graph
 
     ny = int(math.ceil(180.0 / cell_deg))

@@ -455,18 +455,22 @@ def cover_radius(lat: float, lon: float, radius_m: float, nchars: int = 5,
 
 def point_in_polygon(lat, lon, poly_lat, poly_lon) -> np.ndarray:
     """Vectorized ray-cast point-in-polygon (even-odd rule).  ``poly_*``
-    are 1-D vertex arrays (closed implicitly).  Returns bool (N,)."""
+    are 1-D vertex arrays (closed implicitly).  Returns bool (N,).
+
+    A horizontal edge (``py[j] == py[i]``) never straddles a query
+    latitude, so it is masked out before its crossing longitude would
+    divide by zero; the remaining edges divide by a nonzero ``dy``."""
     lat = _as1d(lat)
     lon = _as1d(lon)
     px = np.asarray(poly_lon, dtype=np.float64)
     py = np.asarray(poly_lat, dtype=np.float64)
     inside = np.zeros(lat.shape[0], dtype=bool)
-    nv = px.shape[0]
-    j = nv - 1
-    for i in range(nv):
-        cond = ((py[i] > lat) != (py[j] > lat)) & (
-            lon < (px[j] - px[i]) * (lat - py[i]) / (py[j] - py[i]) + px[i]
-        )
-        inside ^= cond
-        j = i
+    flat = py == np.roll(py, 1)   # edge (j = i - 1, i) is horizontal
+    with np.errstate(divide="raise"):
+        for i in np.flatnonzero(~flat):
+            j = i - 1
+            cond = ((py[i] > lat) != (py[j] > lat)) & (
+                lon < (px[j] - px[i]) * (lat - py[i]) / (py[j] - py[i]) + px[i]
+            )
+            inside ^= cond
     return inside

@@ -1480,6 +1480,36 @@ def test_cell_blobs_union_find_parity(spark):
     assert len(out.columns) == 5
 
 
+def test_cell_blobs_job_count_and_release(spark):
+    """The hotspot map's component step finishes small graphs on the
+    driver: one cell_blobs call on a small raster stays within 10 Spark
+    jobs (40 when every contraction round ran distributed) and leaves
+    no persisted RDD behind after cache.release."""
+    from geotile import cache, engine
+
+    pts = [(lat + 0.1 * k, lon + 0.1 * k)
+           for lat, lon in [(10.0, 20.0), (16.0, 26.0), (10.0, 31.0),
+                            (-40.0, 177.0), (-40.0, -178.0), (60.0, -100.0)]
+           for k in range(8)]
+    df = spark.createDataFrame(pts, "lat double, lon double")
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    group = "test-cell-blobs-jobs"
+    sc.setJobGroup(group, "cell_blobs job count")
+    try:
+        out = engine.cell_blobs(df, cell_deg=5.0, min_count=8)
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    cache.release(out)
+    assert len(rows) == 6
+    # a diagonal 3-cell blob, a pair joined across the lon wrap, a loner
+    assert len({r["blob_id"] for r in rows}) == 3
+    assert 0 < len(jobs) <= 10, jobs
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= before
+
+
 def test_convex_hulls_monotone_chain_parity(spark):
     """QuickHull kernel equals a strict monotone chain on random
     integer tracks: same vertex SET, same CCW rotation order, positive

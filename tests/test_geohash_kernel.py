@@ -242,6 +242,37 @@ def test_point_in_polygon():
     assert list(got) == [True, False, True, False]
 
 
+def test_point_in_polygon_horizontal_edge_on_query_latitude():
+    """Horizontal edges lying ON query latitudes: the ray cast gives
+    the booleans of the unguarded formula, without a RuntimeWarning."""
+    import warnings
+
+    # an L-shape: horizontal edges at lat 0, 1 and 2
+    poly_lat = [0.0, 0.0, 1.0, 1.0, 2.0, 2.0]
+    poly_lon = [0.0, 2.0, 2.0, 1.0, 1.0, 0.0]
+    lat = np.array([0.0, 0.0, 1.0, 1.0, 1.0, 2.0, 0.5, 1.5, 1.5, -1.0])
+    lon = np.array([0.5, 2.5, 0.5, 1.5, 3.0, 0.5, 1.5, 0.5, 1.5, 0.5])
+
+    def unguarded(lat, lon):
+        px, py = np.asarray(poly_lon), np.asarray(poly_lat)
+        inside = np.zeros(lat.shape[0], dtype=bool)
+        j = len(px) - 1
+        with np.errstate(divide="ignore", invalid="ignore"):
+            for i in range(len(px)):
+                inside ^= ((py[i] > lat) != (py[j] > lat)) & (
+                    lon < (px[j] - px[i]) * (lat - py[i]) / (py[j] - py[i]) + px[i])
+                j = i
+        return inside
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        got = gh.point_in_polygon(lat, lon, poly_lat, poly_lon)
+    assert [w for w in caught if issubclass(w.category, RuntimeWarning)] == []
+    assert list(got) == list(unguarded(lat, lon))
+    assert list(got) == [True, False, True, False, False, False,
+                         True, True, False, False]
+
+
 def test_haversine_sanity():
     # ~55.6 m for the two Beijing seeds (matches reference distance closely)
     d = gh.haversine_m(39.928167, 116.389550, 39.928667, 116.389550)[0]

@@ -5,6 +5,7 @@ oracle on structured and randomized edge lists."""
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from geotile import cache, graph
 
@@ -29,12 +30,11 @@ def _uf_components(edges):
     return {n: find(n) for n in parent}
 
 
-def _run(spark, edges):
-    df = spark.createDataFrame(edges, "a long, b long")
-    out = graph.connected_components(df)
+def _run(spark, edges, schema="a long, b long"):
+    out = graph.connected_components(spark.createDataFrame(edges, schema))
     rows = {r["node"]: r["cluster_id"] for r in out.collect()}
     cache.release(out)
-    return rows
+    return out, rows
 
 
 def test_chain_clique_and_isolated_pair(spark):
@@ -42,7 +42,7 @@ def test_chain_clique_and_isolated_pair(spark):
     edges = [(1, 2), (2, 3), (3, 4), (4, 5),
              (10, 11), (11, 12), (10, 12),
              (21, 20), (7, 7)]
-    rows = _run(spark, edges)
+    _, rows = _run(spark, edges)
     assert rows == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
                     10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
@@ -54,20 +54,95 @@ def test_matches_union_find_on_random_graphs(spark):
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(50)]
         edges = [e for e in edges if e[0] != e[1]]
         expect = _uf_components(edges)
-        assert _run(spark, edges) == expect
+        assert _run(spark, edges)[1] == expect
 
 
 def test_long_chain_converges(spark):
     # worst-case diameter for min-propagation: a 30-node descending chain
     edges = [(i + 1, i) for i in range(30)]
-    rows = _run(spark, edges)
+    _, rows = _run(spark, edges)
     assert set(rows.values()) == {0}
 
 
-def test_non_convergence_raises(spark):
+def test_non_convergence_raises(spark, monkeypatch):
+    # the max_iter guard belongs to the distributed rounds: force them
+    monkeypatch.setattr(graph, "LOCAL_CC_MAX_EDGES", 0)
     df = spark.createDataFrame([(i + 1, i) for i in range(10)], "a long, b long")
     with pytest.raises(RuntimeError):
         graph.connected_components(df, max_iter=2)
+
+
+@pytest.fixture(params=["distributed", "local"])
+def cc_path(request, monkeypatch):
+    """Force one side of the connected_components cutover: a constant
+    of 0 runs distributed rounds until the fixpoint, a huge one
+    finishes every graph on the driver."""
+    limit = 0 if request.param == "distributed" else 10**9
+    monkeypatch.setattr(graph, "LOCAL_CC_MAX_EDGES", limit)
+    return request.param
+
+
+def test_cutover_paths_match_union_find(spark, cc_path):
+    rng = random.Random(17)
+    for trial in range(3):
+        n = 80
+        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(70)]
+        # duplicates, reversed copies and self-loops
+        edges += edges[:10] + [(b, a) for a, b in edges[10:25]]
+        edges += [(i, i) for i in range(0, n, 9)]
+        out, rows = _run(spark, edges)
+        assert rows == _uf_components([e for e in edges if e[0] != e[1]])
+        assert (out._geotile_rounds > 0) == (cc_path == "distributed")
+
+
+def test_cutover_paths_empty_edges(spark, cc_path):
+    out, rows = _run(spark, [])
+    assert rows == {}
+    assert out.schema == _run(spark, [(2, 1)])[0].schema
+    assert out.columns == ["node", "cluster_id"]
+    assert out._geotile_rounds == 0
+
+
+def test_cutover_paths_keep_int_ids(spark, cc_path):
+    edges = [(5, 3), (3, 9), (9, 5), (40, 41), (41, 42)]
+    out, rows = _run(spark, edges, "a int, b int")
+    assert [f.dataType.simpleString() for f in out.schema] == ["int", "int"]
+    assert rows == _uf_components(edges)
+    out, _ = _run(spark, edges)
+    assert [f.dataType.simpleString() for f in out.schema] == ["bigint", "bigint"]
+
+
+def test_cutover_paths_shuffled_long_chain(spark, cc_path):
+    # 100k-node chain with shuffled ids: worst case for min propagation
+    import numpy as np
+    import pandas as pd
+
+    n = 100_000
+    ids = np.random.default_rng(5).permutation(n).astype(np.int64) + 7
+    out = graph.connected_components(
+        spark.createDataFrame(pd.DataFrame({"a": ids[1:], "b": ids[:-1]})))
+    stats = out.agg(F.count("*").alias("n"),
+                    F.countDistinct("cluster_id").alias("k"),
+                    F.min("cluster_id").alias("c")).first()
+    assert (stats["n"], stats["k"], stats["c"]) == (n, 1, 7)
+
+
+def test_cutover_crossed_between_rounds(spark, monkeypatch):
+    """A constant between the input and contracted sizes: the first
+    rounds run distributed, then the contracted edges finish locally —
+    with the same labels as the union-find."""
+    rng = random.Random(23)
+    edges = [(i + 1, i) for i in range(200)]              # one long chain
+    edges += [(rng.randrange(300, 700), rng.randrange(300, 700))
+              for _ in range(400)]
+    edges = [e for e in edges if e[0] != e[1]]
+    monkeypatch.setattr(graph, "LOCAL_CC_MAX_EDGES", 0)
+    full, _ = _run(spark, edges)
+    n_in = len({(max(e), min(e)) for e in edges})
+    monkeypatch.setattr(graph, "LOCAL_CC_MAX_EDGES", n_in - 1)
+    out, rows = _run(spark, edges)
+    assert rows == _uf_components(edges)
+    assert 1 <= out._geotile_rounds < full._geotile_rounds
 
 
 def _pr_local(n, edges, iters=5, damping_pct=85):

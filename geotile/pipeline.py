@@ -10,7 +10,8 @@ bench.  Stage graph (each stage = one manifest-committed table):
   points     extract + mentions explode + cells      partition: gh2 (2-char prefix)
   joined     radius join vs the city POI set         partition: none (result)
   rollup     per-cell counts (salted aggregation)    partition: none
-  store      latest point per url via MERGE INTO     bucketed catalog table (url)
+  store      latest point per url via MERGE INTO     external table, 16 buckets on url,
+                                                     data under store/data.v<N>
 
 At 100 TB the 'points' table is the big one; it is written partitioned
 by the 2-char cell prefix so every later spatial join prunes partitions
@@ -21,6 +22,7 @@ splitting + the salted rollup.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import os
 import time
 
@@ -29,8 +31,11 @@ from pyspark.sql import functions as F
 
 from . import engine, extract, synth, table
 
+NCHARS = 5  # geohash length of the points stage
+JOIN_RADIUS_M = 50000.0  # radius of the join stage's city queries
 
-def poi_queries(spark: SparkSession, radius_m: float = 50000.0) -> DataFrame:
+
+def poi_queries(spark: SparkSession, radius_m: float = JOIN_RADIUS_M) -> DataFrame:
     rows = [(i, name, lat, lon, radius_m) for i, (name, lat, lon) in enumerate(synth.CITIES)]
     return spark.createDataFrame(
         rows, "query_id long, poi string, qlat double, qlon double, radius_m double")
@@ -100,7 +105,7 @@ def _points_batches(nchars: int):
     return _fn
 
 
-def stage_points(spark: SparkSession, workdir: str, nchars: int = 5) -> str:
+def stage_points(spark: SparkSession, workdir: str, nchars: int = NCHARS) -> str:
     pages_path = os.path.join(workdir, "pages")
     path = os.path.join(workdir, "points")
     params = {"nchars": nchars}
@@ -149,7 +154,7 @@ def stage_points(spark: SparkSession, workdir: str, nchars: int = 5) -> str:
     return path
 
 
-def stage_join(spark: SparkSession, workdir: str, radius_m: float = 50000.0) -> str:
+def stage_join(spark: SparkSession, workdir: str, radius_m: float = JOIN_RADIUS_M) -> str:
     points_path = os.path.join(workdir, "points")
     path = os.path.join(workdir, "joined")
     params = {"radius_m": radius_m}
@@ -175,6 +180,27 @@ def stage_rollup(spark: SparkSession, workdir: str) -> str:
     return path
 
 
+STORE_KEY = "url"
+STORE_BUCKETS = 16
+
+
+def _store_name(workdir: str) -> str:
+    return "geotile_store_" + hashlib.sha256(
+        os.path.abspath(workdir).encode()).hexdigest()[:10]
+
+
+def _committed_store(workdir: str) -> dict | None:
+    """The store manifest when it matches the points lineage AND the
+    data directory it names is on disk; None when the store must be
+    (re)built.  A manifest alone never counts as a committed store."""
+    path = os.path.join(workdir, "store")
+    m = table.read_manifest(path)
+    if m is None or not os.path.isdir(m.get("location", "")):
+        return None
+    params = {"table": _store_name(workdir)}
+    return m if table.is_complete(path, [os.path.join(workdir, "points")], params) else None
+
+
 def stage_store(spark: SparkSession, workdir: str) -> str:
     """Keyed positions STORE maintained through the production MERGE
     API (table.merge_into): the latest mention per url, LWW on
@@ -189,23 +215,31 @@ def stage_store(spark: SparkSession, workdir: str) -> str:
     exercises both the create and the incremental-merge path, exactly
     how a daily crawl lands on the store at cluster scale.
 
-    Resume contract: a manifest under ``workdir/store`` records the
-    points lineage; when it matches AND the catalog table exists the
-    stage is skipped.  A crash between merge_into's DROP and RENAME is
-    repaired by recover_merge on the next entry (tested).  The catalog
-    here is per-session (in-memory); a restart with a warm manifest but
-    a cold catalog rebuilds the store — an Iceberg/Hive catalog makes
-    that case a no-op."""
-    import hashlib
-    import json
+    Storage: the catalog table ``geotile_store_<hash of workdir>`` is
+    EXTERNAL, 16 buckets on url sorted by url, and every version of its
+    data is a directory ``workdir/store/data.v<N>``.  The manifest
+    ``workdir/store/_manifest.json`` records the points lineage, the
+    committed data directory, the schema and the bucket spec; its
+    commit is the stage's single commit point, and older data
+    directories are deleted only after it.
+
+    Resume contract: when the manifest matches and its data directory
+    exists, the stage is skipped; if the catalog lacks the table (a new
+    session) or points elsewhere, the table is re-registered from the
+    manifest (metadata only, no job), not rebuilt.  A missing data
+    directory rebuilds the store.  A crash between merge_into's DROP
+    and RENAME is repaired by recover_merge on the next entry
+    (tested)."""
+    import shutil
 
     points_path = os.path.join(workdir, "points")
     path = os.path.join(workdir, "store")
-    name = "geotile_store_" + hashlib.sha256(
-        os.path.abspath(workdir).encode()).hexdigest()[:10]
-    params = {"table": name}
-    if table.is_complete(path, parents=[points_path], params=params) \
-            and spark.catalog.tableExists(name):
+    name = _store_name(workdir)
+    m = _committed_store(workdir)
+    if m is not None:
+        if table.table_location(spark, name) != m["location"]:
+            table.register_bucketed(spark, name, m["location"], m["schema_json"],
+                                    m["bucket_by"], m["n_buckets"])
         return path
     table.recover_merge(spark, name)
     points = table.read_stage(spark, points_path)
@@ -220,23 +254,22 @@ def stage_store(spark: SparkSession, workdir: str) -> str:
     w = Window.partitionBy("url").orderBy(F.col("ts").desc(), *tie)
     seed = (seed.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1).drop("_rn"))
-    table.write_bucketed(seed, name, "url")
+    table.write_bucketed(seed, name, STORE_KEY, STORE_BUCKETS,
+                         path=table.next_version(os.path.join(path, "data")))
     table.merge_into(spark, name, upd.where(F.col("_b") == 1).drop("_b"),
-                     key="url", ts="ts")
-    n = spark.table(name).count()
-    # commit the stage manifest (data lives in the catalog/warehouse;
-    # the manifest dir carries lineage + the row count metric)
-    os.makedirs(path, exist_ok=True)
-    pm = table.read_manifest(points_path)
-    manifest = {"format_version": 1, "committed_at": time.time(),
-                "lineage": table._lineage_hash(
-                    [pm["lineage"] if pm else "missing:" + points_path], params),
-                "partition_by": [], "partitions": {"": n},
-                "total_rows": n, "params": params}
-    tmp = os.path.join(path, table.MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(path, table.MANIFEST))
+                     key=STORE_KEY, ts="ts", n_buckets=STORE_BUCKETS)
+    loc = table.table_location(spark, name)
+    params = {"table": name}
+    table.commit_manifest(path, {
+        "lineage": table.stage_lineage([points_path], params), "params": params,
+        "partition_by": [], "partitions": table._footer_counts(loc, []),
+        "schema_json": spark.table(name).schema.json(), "location": loc,
+        "bucket_by": STORE_KEY, "n_buckets": STORE_BUCKETS})
+    # past the commit point no manifest names the older data versions
+    for d in os.listdir(path):
+        old = os.path.join(os.path.dirname(loc), d)
+        if d.startswith("data.v") and old != loc:
+            shutil.rmtree(old)
     return path
 
 
@@ -252,8 +285,8 @@ def warm_up(spark: SparkSession, workdir: str | None = None) -> None:
     if workdir is not None:
         scratch = os.path.join(workdir, "_warmup")
         pages = synth.synth_pages(spark, 2000, p)
-        pts = pages.mapInPandas(_points_batches(5), schema=POINTS_SCHEMA)
-        qrows = [(i, lat, lon, 50000.0)
+        pts = pages.mapInPandas(_points_batches(NCHARS), schema=POINTS_SCHEMA)
+        qrows = [(i, lat, lon, JOIN_RADIUS_M)
                  for i, (_name, lat, lon) in enumerate(synth.CITIES)]
         j = engine.radius_join(pts, qrows)
         j.select("url", "query_id", "geohash", "dist_m").write.mode(
@@ -265,15 +298,36 @@ def warm_up(spark: SparkSession, workdir: str | None = None) -> None:
         shutil.rmtree(scratch, ignore_errors=True)
 
 
+def _all_committed(workdir: str, n: int) -> bool:
+    """True when every stage would be skipped: each manifest matches
+    run_pipeline's parameters and the store's data is on disk."""
+    def w(stage):
+        return os.path.join(workdir, stage)
+
+    return (table.is_complete(w("pages"), params={"n": n})
+            and table.is_complete(w("points"), [w("pages")], {"nchars": NCHARS})
+            and table.is_complete(w("joined"), [w("points")], {"radius_m": JOIN_RADIUS_M})
+            and table.is_complete(w("rollup"), [w("points")])
+            and _committed_store(workdir) is not None)
+
+
 def run_pipeline(spark: SparkSession, workdir: str, n: int,
                  partitions: int | None = None) -> dict:
-    """Run (or resume) all stages; returns timing + row metrics.
+    """Run (or resume) all stages; returns row counts and timings.
 
     ``joined`` and ``rollup`` are independent consumers of ``points``,
     so they run as CONCURRENT Spark jobs (two driver threads; the
     scheduler interleaves their tasks) — standard DAG-level parallelism
-    that fills scheduling gaps instead of serializing two scans."""
-    warm_up(spark, workdir)
+    that fills scheduling gaps instead of serializing two scans.
+
+    A workdir whose every stage is committed is a no-op: the dry-run
+    warm-up is skipped (nothing will run), the store at most re-attaches
+    its catalog entry, and the result says ``resumed: True`` with
+    ``pages_per_sec: None``.  ``t_total`` runs from pages to the
+    committed store."""
+    resumed = _all_committed(workdir, n)
+    if not resumed:
+        warm_up(spark, workdir)
     t0 = time.time()
     stage_pages(spark, workdir, n, partitions)
     t1 = time.time()
@@ -292,22 +346,17 @@ def run_pipeline(spark: SparkSession, workdir: str, n: int,
         d_join = f_join.result()
         d_rollup = f_rollup.result()
     t4 = time.time()
-    # keyed positions store via the production MERGE path — timed
-    # separately so t_total/pages_per_sec keep their round-comparable
-    # definition (synth -> extract -> tile -> join/rollup)
+    # keyed positions store via the production MERGE path
     stage_store(spark, workdir)
     t5 = time.time()
-    m_pages = table.read_manifest(os.path.join(workdir, "pages"))
-    m_points = table.read_manifest(os.path.join(workdir, "points"))
-    m_joined = table.read_manifest(os.path.join(workdir, "joined"))
-    m_store = table.read_manifest(os.path.join(workdir, "store"))
+    m = {s: table.read_manifest(os.path.join(workdir, s))["total_rows"]
+         for s in ("pages", "points", "joined", "store")}
     return {
-        "pages": m_pages["total_rows"], "points": m_points["total_rows"],
-        "joined": m_joined["total_rows"], "store": m_store["total_rows"],
+        **m, "resumed": resumed,
         "t_pages": t1 - t0, "t_points": t2 - t1, "t_join": d_join,
         "t_rollup": d_rollup, "t_spatial": t4 - t2, "t_store": t5 - t4,
-        "t_total": t4 - t0,
-        "pages_per_sec": m_pages["total_rows"] / max(t4 - t0, 1e-9),
+        "t_total": t5 - t0,
+        "pages_per_sec": None if resumed else m["pages"] / max(t5 - t0, 1e-9),
     }
 
 
@@ -315,8 +364,17 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n", type=int, default=100000)
     ap.add_argument("--workdir", default="/tmp/geotile_pipeline")
-    ap.add_argument("--cores", type=int, default=None)
+    # default: SPARK_GRAFT_CPUS, else every core this process may run on
+    ap.add_argument("--cores", type=int, default=int(
+        os.environ.get("SPARK_GRAFT_CPUS") or 0) or len(os.sched_getaffinity(0)))
     args = ap.parse_args()
+    # the session catalog creates its warehouse dir on first use; keep
+    # it (empty: the store is external) inside the workdir
+    import shlex
+
+    warehouse = os.path.join(os.path.abspath(args.workdir), "spark-warehouse")
+    os.environ.setdefault("PYSPARK_SUBMIT_ARGS", shlex.join(
+        ["--conf", f"spark.sql.warehouse.dir={warehouse}", "pyspark-shell"]))
     from .session import get_spark
 
     spark = get_spark("geotile-pipeline", cores=args.cores)

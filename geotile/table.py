@@ -7,7 +7,9 @@ else recreate; /root/reference/GeoHash/mapinfo.cpp:55-95: Load rebuilds
 derived state).  Mapping:
 
   * shm segment-size check  -> schema fingerprint in _manifest.json
-  * attach (resume)         -> stage with a valid manifest is skipped
+  * attach (resume)         -> stage with a valid manifest is skipped; an
+                               external bucketed table is re-registered
+                               over its data dir (register_bucketed)
   * Load() index rebuild    -> derived columns (cells) recomputed cheaply
   * pool counters           -> per-partition row counts in the manifest
 
@@ -23,6 +25,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import time
 from typing import Sequence
 
@@ -79,33 +82,44 @@ def write_stage(df: DataFrame, path: str, partition_by: Sequence[str] = (),
     re-apply the same clustering so row-group min/max pruning survives
     compaction."""
     params = params or {}
-    parent_hashes = []
-    for p in parents:
-        m = read_manifest(p)
-        parent_hashes.append(m["lineage"] if m else "missing:" + p)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-    counts = _footer_counts(path, list(partition_by))
-    manifest = {
-        "format_version": 1,
-        "committed_at": time.time(),
+    return commit_manifest(path, {
         "schema_json": df.schema.json(),
         "schema_fingerprint": _schema_fingerprint(df),
-        "lineage": _lineage_hash(parent_hashes, params),
+        "lineage": stage_lineage(parents, params),
         "partition_by": list(partition_by),
         "sort_by": list(sort_by),
-        "partitions": counts,
-        "total_rows": int(sum(counts.values())),
+        "partitions": _footer_counts(path, list(partition_by)),
         "params": params,
-    }
+    })
+
+
+def commit_manifest(path: str, manifest: dict) -> dict:
+    """The single commit point of a stage: stamp ``manifest`` (its
+    ``total_rows`` summed from ``partitions``) and atomically replace
+    ``path``/_manifest.json with it.  Data written before this call is
+    uncommitted until it returns."""
+    manifest = {**manifest, "format_version": 1, "committed_at": time.time(),
+                "total_rows": int(sum(manifest["partitions"].values()))}
+    os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, MANIFEST + ".tmp")
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=1, sort_keys=True)
     os.replace(tmp, os.path.join(path, MANIFEST))  # atomic commit
     return manifest
+
+
+def stage_lineage(parents: Sequence[str], params: dict | None = None) -> str:
+    """Lineage hash of a stage: its parents' committed lineage (or their
+    absence) plus its own params."""
+    parent_hashes = []
+    for p in parents:
+        pm = read_manifest(p)
+        parent_hashes.append(pm["lineage"] if pm else "missing:" + p)
+    return _lineage_hash(parent_hashes, params or {})
 
 
 def read_manifest(path: str) -> dict | None:
@@ -121,13 +135,7 @@ def is_complete(path: str, parents: Sequence[str] = (), params: dict | None = No
     matches the current parents+params (the 'attach-if-same-size' check:
     a changed upstream or parameter invalidates the stage)."""
     m = read_manifest(path)
-    if m is None:
-        return False
-    parent_hashes = []
-    for p in parents:
-        pm = read_manifest(p)
-        parent_hashes.append(pm["lineage"] if pm else "missing:" + p)
-    return m["lineage"] == _lineage_hash(parent_hashes, params or {})
+    return m is not None and m["lineage"] == stage_lineage(parents, params)
 
 
 def read_stage(spark: SparkSession, path: str) -> DataFrame:
@@ -140,7 +148,7 @@ def read_stage(spark: SparkSession, path: str) -> DataFrame:
 
 
 def write_bucketed(df: DataFrame, name: str, key: str, n_buckets: int = 16,
-                   sort: bool = True) -> None:
+                   sort: bool = True, path: str | None = None) -> None:
     """Store a keyed table bucketed (and sorted) by ``key``.
 
     This is the storage layout that makes the engine's ONE unavoidable
@@ -150,21 +158,79 @@ def write_bucketed(df: DataFrame, name: str, key: str, n_buckets: int = 16,
     Exchange — verified by plan assertion in
     tests/test_pipeline.py::test_bucketed_upsert_has_no_exchange.
     At cluster scale this is the positions store keyed by url/msisdn
-    (SURVEY.md §7.3's 'bucket the stored table by key')."""
+    (SURVEY.md §7.3's 'bucket the stored table by key').
+
+    Where the data lives: without ``path`` the table is MANAGED, under
+    the session's ``spark.sql.warehouse.dir``, and DROP TABLE deletes
+    it.  With ``path`` it is EXTERNAL: its files live at ``path``
+    (replaced if present), outlive DROP TABLE, and a new session can
+    attach them again with :func:`register_bucketed`."""
     import shutil
 
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    # with the in-memory catalog a previous session's managed location
-    # survives the dropped catalog entry; clear it so saveAsTable can
-    # claim the path
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    loc = os.path.join(warehouse.removeprefix("file:"), name.split(".")[-1])
+    loc = path
+    if path is None:
+        # with the in-memory catalog a previous session's managed
+        # location survives the dropped catalog entry; clear it so
+        # saveAsTable can claim the path
+        warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+        loc = os.path.join(warehouse.removeprefix("file:"), name.split(".")[-1])
     shutil.rmtree(loc, ignore_errors=True)
     w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, key)
     if sort:
         w = w.sortBy(key)
+    if path is not None:
+        w = w.option("path", path)
     w.saveAsTable(name)
+
+
+def register_bucketed(spark: SparkSession, name: str, path: str, schema_json: str,
+                      key: str, n_buckets: int) -> None:
+    """Attach the bucketed, sorted parquet data that
+    :func:`write_bucketed` left at ``path`` as the EXTERNAL catalog
+    table ``name`` (replacing any entry of that name).  Metadata only:
+    no file is read or written, so a cold catalog gets its table back
+    without a rebuild, and the scan still reports the bucketing the
+    data was written with."""
+    from pyspark.sql.types import StructType
+
+    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
+                     for f in StructType.fromJson(json.loads(schema_json)))
+    if _catalog_table(spark, name) is not None:
+        spark.sql(f"DROP TABLE {name}")
+    spark.sql(f"CREATE TABLE {name} ({cols}) USING parquet CLUSTERED BY ({key}) "
+              f"SORTED BY ({key}) INTO {n_buckets} BUCKETS LOCATION '{path}'")
+
+
+def _catalog_table(spark: SparkSession, name: str):
+    """The session catalog's entry for table ``name`` (a JVM
+    CatalogTable), None when there is none.  A lookup: no query runs."""
+    state = spark._jsparkSession.sessionState()
+    ident = state.sqlParser().parseTableIdentifier(name)
+    return state.catalog().getTableMetadata(ident) if state.catalog().tableExists(ident) else None
+
+
+def table_location(spark: SparkSession, name: str) -> str | None:
+    """Data directory of the EXTERNAL catalog table ``name``; None when
+    no such table exists or it is managed (its data then lives in the
+    warehouse)."""
+    meta = _catalog_table(spark, name)
+    if meta is None or meta.tableType().name() != "EXTERNAL":
+        return None
+    return meta.location().getPath()
+
+
+def next_version(path: str) -> str:
+    """A fresh data directory beside ``path`` for the next version of an
+    external table: ``<stem>.v<N+1>``, where ``path`` is the bare stem
+    or one of its versions and N the highest version on disk."""
+    parent, base = os.path.split(os.path.abspath(path))
+    stem = re.sub(r"\.v\d+$", "", base)
+    pat = re.compile(re.escape(stem) + r"\.v(\d+)")
+    taken = [int(m.group(1)) for f in (os.listdir(parent) if os.path.isdir(parent) else ())
+             if (m := pat.fullmatch(f))]
+    return os.path.join(parent, f"{stem}.v{max(taken, default=0) + 1}")
 
 
 def merge_into(spark: SparkSession, target: str, updates: DataFrame,
@@ -186,6 +252,13 @@ def merge_into(spark: SparkSession, target: str, updates: DataFrame,
     tests/test_pipeline.py) — followed by a bucketed rewrite and a
     catalog swap (stage table + RENAME; an Iceberg catalog would make
     this step a snapshot commit instead).
+
+    Where the data lives: a managed target's rewrite is managed too
+    (session warehouse).  An EXTERNAL target's rewrite goes to a fresh
+    versioned directory beside its location (:func:`next_version`), so
+    its data never moves into the warehouse; the replaced directory is
+    left in place for the caller, whose own commit point (a stage
+    manifest, for pipeline.stage_store) decides when it may go.
 
     Raw updates may carry several rows per key (the normal AddPos batch
     shape): they are LWW-deduped here first, because BOTH downstream
@@ -237,7 +310,9 @@ def merge_into(spark: SparkSession, target: str, updates: DataFrame,
                                                key=key, ts=ts)
         plan = merged._jdf.queryExecution().executedPlan().toString()
         stage = f"{target}__merge_stage"
-        write_bucketed(merged, stage, key, n_buckets=n_buckets)
+        loc = table_location(spark, target)
+        write_bucketed(merged, stage, key, n_buckets=n_buckets,
+                       path=loc and next_version(loc))
         spark.sql(f"DROP TABLE {target}")
         spark.sql(f"ALTER TABLE {stage} RENAME TO {target}")
         return {"path": "merge-join", "plan": plan}
@@ -302,11 +377,7 @@ def compact(spark: SparkSession, path: str, target_mb: int = 128) -> dict:
     shutil.rmtree(bak, ignore_errors=True)
     os.replace(path, bak)
     os.replace(tmp, path)
-    m["partitions"] = new_counts
-    m["committed_at"] = time.time()
-    with open(os.path.join(path, MANIFEST + ".tmp"), "w") as f:
-        json.dump(m, f, indent=1, sort_keys=True)
-    os.replace(os.path.join(path, MANIFEST + ".tmp"), os.path.join(path, MANIFEST))
+    m = commit_manifest(path, {**m, "partitions": new_counts})
     shutil.rmtree(bak, ignore_errors=True)  # commit point passed
     return m
 

@@ -1,6 +1,7 @@
 """Synth determinism, extraction invariants, manifest resume."""
 
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -111,6 +112,70 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     assert m3["store"] == n_urls
     assert spark.table(store_name).count() == n_urls
     assert not spark.catalog.tableExists(f"{store_name}__merge_stage")
+
+
+def _store_files(wd):
+    root = os.path.join(wd, "store")
+    return {os.path.relpath(os.path.join(d, f), root): os.path.getmtime(os.path.join(d, f))
+            for d, _dirs, fs in os.walk(root) for f in fs}
+
+
+def test_store_cold_catalog_reattaches_without_rebuild(spark, tmp_path):
+    """A committed workdir is the whole state: with only the catalog
+    entry gone (a new session), the rerun re-registers the external
+    bucketed store from its manifest, rewrites nothing, and the
+    re-attached table still plans the keyed merge without a shuffle."""
+    wd = str(tmp_path / "wd")
+    m = pipeline.run_pipeline(spark, wd, n=2000, partitions=4)
+    assert m["resumed"] is False and m["pages_per_sec"] > 0
+    name = pipeline._store_name(wd)
+    before = _store_files(wd)
+    spark.sql(f"DROP TABLE {name}")
+    assert not spark.catalog.tableExists(name)
+    m2 = pipeline.run_pipeline(spark, wd, n=2000, partitions=4)
+    assert _store_files(wd) == before  # data files and manifest untouched
+    assert m2["resumed"] is True and m2["pages_per_sec"] is None
+    assert m2["t_store"] < 0.5
+    assert {k: m2[k] for k in ("pages", "points", "joined", "store")} == \
+        {k: m[k] for k in ("pages", "points", "joined", "store")}
+    assert spark.table(name).count() == m["store"]
+
+    info = {r[0]: r[1] for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()}
+    assert info["Type"] == "EXTERNAL"
+    assert info["Num Buckets"] == "16" and info["Bucket Columns"] == "[`url`]"
+    assert info["Location"].removeprefix("file:").startswith(os.path.abspath(wd) + os.sep)
+
+    upd = spark.createDataFrame(
+        [("http://x/1", None, 1.0, 2.0, "s00")],
+        "url string, ts timestamp, lat double, lon double, geohash string")
+    table.write_bucketed(upd, name + "_upd", "url", 16, path=str(tmp_path / "upd"))
+    merged = engine.upsert_positions_merge(spark.table(name), spark.table(name + "_upd"),
+                                           key="url", ts="ts")
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    spark.sql(f"DROP TABLE {name}_upd")
+    # nothing of the store ever landed in the session warehouse
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    stray = os.listdir(warehouse) if os.path.isdir(warehouse) else []
+    assert not [d for d in stray if d.startswith(name)], stray
+
+
+def test_store_lost_data_rebuilds(spark, tmp_path):
+    """A manifest without its data directory is not a committed store:
+    the rerun rebuilds it (right count, data on disk again) instead of
+    re-registering a missing location."""
+    wd = str(tmp_path / "wd")
+    m = pipeline.run_pipeline(spark, wd, n=2000, partitions=4)
+    manifest = table.read_manifest(os.path.join(wd, "store"))
+    shutil.rmtree(manifest["location"])
+    m2 = pipeline.run_pipeline(spark, wd, n=2000, partitions=4)
+    assert m2["resumed"] is False and m2["store"] == m["store"]
+    rebuilt = table.read_manifest(os.path.join(wd, "store"))
+    assert os.path.isdir(rebuilt["location"])
+    assert spark.table(pipeline._store_name(wd)).count() == m["store"]
+    # only the committed version is left on disk
+    assert [d for d in os.listdir(os.path.join(wd, "store")) if d.startswith("data.v")] \
+        == [os.path.basename(rebuilt["location"])]
 
 
 def test_join_rows_identical_across_parallelism(spark, tmp_path):

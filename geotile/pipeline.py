@@ -364,9 +364,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n", type=int, default=100000)
     ap.add_argument("--workdir", default="/tmp/geotile_pipeline")
-    # default: SPARK_GRAFT_CPUS, else every core this process may run on
-    ap.add_argument("--cores", type=int, default=int(
-        os.environ.get("SPARK_GRAFT_CPUS") or 0) or len(os.sched_getaffinity(0)))
+    ap.add_argument("--cores", type=int, default=None,
+                    help="default: session.default_cores()")
     args = ap.parse_args()
     # the session catalog creates its warehouse dir on first use; keep
     # it (empty: the store is external) inside the workdir

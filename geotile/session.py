@@ -1,6 +1,6 @@
 """SparkSession factory tuned for the engine.
 
-Local-mode testing runs on ``local[$SPARK_GRAFT_CPUS]``; on a real
+Local-mode testing runs on ``local[default_cores()]``; on a real
 cluster the same settings apply minus the master override (spark-submit
 provides it).  AQE is on so skewed cell joins re-plan at runtime.
 """
@@ -12,10 +12,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """The core count a session gets unless its caller names one:
+    ``$SPARK_GRAFT_CPUS``, else every core this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or 0) or len(os.sched_getaffinity(0))
+
+
 def get_spark(app: str = "geotile", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = SparkSession.builder

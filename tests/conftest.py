@@ -8,10 +8,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 @pytest.fixture(scope="session")
 def spark():
-    cores = int(os.environ.setdefault("SPARK_GRAFT_CPUS", "8"))
     from geotile.session import get_spark
 
-    s = get_spark("geotile-tests", cores=cores, shuffle_partitions=8)
+    s = get_spark("geotile-tests", shuffle_partitions=8)
     yield s
 
 

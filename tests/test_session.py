@@ -41,3 +41,18 @@ def test_master_fallback_local():
         "print('MASTER=' + s.conf.get('spark.master'));"
         "s.stop()")
     assert "MASTER=local[2]" in out
+
+
+def test_default_cores(monkeypatch):
+    """SPARK_GRAFT_CPUS wins; unset or empty, every core the process may
+    run on."""
+    import os
+
+    from geotile.session import default_cores
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cores() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+    assert default_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert default_cores() == len(os.sched_getaffinity(0))

@@ -2445,15 +2445,11 @@ def _q120_cell_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     terms by tf * floor(ln(N_cells/df)*1e9) surface what distinguishes
     that region's pages.  One corpus-token shuffle; the idf floor
     snaps the q63-proven ln parity to exact int64."""
-    from geotile import udfs
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    located = docs.select(
+    docs = spark.read.parquet(f"{sf}/documents.parquet").select(
         "text",
-        udfs.geohash_udf(1)(
-            (((F.col("doc_id") * 7919 + 11) % 160000) / F.lit(1000.0) - 80.0),
-            (((F.col("doc_id") * 104729 + 5) % 340000) / F.lit(1000.0) - 170.0),
-        ).alias("cell"))
+        (((F.col("doc_id") * 7919 + 11) % 160000) / F.lit(1000.0) - 80.0).alias("lat"),
+        (((F.col("doc_id") * 104729 + 5) % 340000) / F.lit(1000.0) - 170.0).alias("lon"))
+    located = engine.with_cell(docs, nchars=1, out="cell").select("text", "cell")
     from geotile import cache
 
     out = textops.cell_top_terms(located, cell_col="cell", k=5)

@@ -43,11 +43,42 @@ _M_PER_DEG = math.pi * gh.EARTH_RADIUS_M / 180.0
 # ---------------------------------------------------------------------------
 
 
+# Geohash character k interleaves a 3-bit slice ``a`` of one axis with a
+# 2-bit slice ``b`` of the other (a2 b1 a1 b0 a0); this alphabet is base32
+# permuted so that its ``(a << 2 | b)``-th letter is that digit's.
+_B32_3X2 = "".join(chr(gh._BASE32[(a & 1) | (a & 2) << 1 | (a & 4) << 2
+                                  | (b & 1) << 1 | (b & 2) << 2])
+                   for a in range(8) for b in range(4))
+
+
 def with_cell(df: DataFrame, lat: str = "lat", lon: str = "lon",
               nchars: int = DEFAULT_NCHARS, out: str = "geohash") -> DataFrame:
-    """Materialize the canonical geohash cell column.  Narrow map — no
-    shuffle; at scale this column is also the table's partition key."""
-    return df.withColumn(out, udfs.geohash_udf(nchars)(F.col(lat), F.col(lon)))
+    """Materialize the canonical geohash cell column (``gh.encode``, 1 to
+    12 chars) as ONE native expression — no Python crossing.  Narrow
+    map — no shuffle; at scale this column is also the table's
+    partition key.
+
+    NULL and NaN coordinates land in cell 0 of their axis, as in
+    ``gh.encode``; +-inf and out-of-range values clamp to the end cells.
+    Code bit p (from the top) is lon's when p is even, lat's when odd,
+    so each character reads its two axis slices straight from the
+    lattice indices (``udfs.lattice_ij``): 2 * nchars references to
+    them, small enough to stay inside codegen even where a filter on
+    the cell is pushed below this projection and inlines it."""
+    lat_bits, lon_bits = gh._axis_bits(nchars)
+    i, j = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
+    axes, nbits = (j, i), (lon_bits, lat_bits)  # axis e holds code bits p % 2 == e
+
+    def top_bits(e, t, n):  # bits t .. t+n-1 of axis e, counted from its top
+        return F.shiftright(axes[e], nbits[e] - t - n).bitwiseAND(F.lit((1 << n) - 1))
+
+    chars = []
+    for k in range(nchars):
+        p = 5 * k
+        e = p % 2
+        idx = F.shiftleft(top_bits(e, p // 2, 3), 2).bitwiseOR(top_bits(1 - e, (p + 1) // 2, 2))
+        chars.append(F.lit(_B32_3X2).substr((idx + 1).cast("int"), F.lit(1)))
+    return df.withColumn(out, F.concat(*chars))
 
 
 def with_cell_ref(df: DataFrame, lat: str = "lat", lon: str = "lon",
@@ -1343,12 +1374,7 @@ def cell_density_smooth(df: DataFrame, lat: str = "lat", lon: str = "lon",
     from . import cache
 
     ni, nj = 1 << lat_bits, 1 << lon_bits
-    ila = F.least(F.greatest(F.floor(
-        (F.col(lat) + F.lit(90.0)) * F.lit(ni / 180.0)).cast("long"),
-        F.lit(0).cast("long")), F.lit(ni - 1).cast("long"))
-    ilo = F.least(F.greatest(F.floor(
-        (F.col(lon) + F.lit(180.0)) * F.lit(nj / 360.0)).cast("long"),
-        F.lit(0).cast("long")), F.lit(nj - 1).cast("long"))
+    ila, ilo = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
     cells = (df.select(ila.alias("i"), ilo.alias("j"))
              .groupBy("i", "j").agg(F.count("*").alias("n"))
              .persist())
@@ -1399,12 +1425,7 @@ def morans_i(df: DataFrame, lat: str = "lat", lon: str = "lon",
     from . import cache
 
     ni, nj = 1 << lat_bits, 1 << lon_bits
-    ila = F.least(F.greatest(F.floor(
-        (F.col(lat) + F.lit(90.0)) * F.lit(ni / 180.0)).cast("long"),
-        F.lit(0).cast("long")), F.lit(ni - 1).cast("long"))
-    ilo = F.least(F.greatest(F.floor(
-        (F.col(lon) + F.lit(180.0)) * F.lit(nj / 360.0)).cast("long"),
-        F.lit(0).cast("long")), F.lit(nj - 1).cast("long"))
+    ila, ilo = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
     cells = (df.select(ila.alias("i"), ilo.alias("j"))
              .groupBy("i", "j").agg(F.count("*").alias("n"))
              .persist())
@@ -2172,12 +2193,7 @@ def heat_peaks(df: DataFrame, lat: str = "lat", lon: str = "lon",
     from . import cache
 
     ni, nj = 1 << lat_bits, 1 << lon_bits
-    ila = F.least(F.greatest(F.floor(
-        (F.col(lat) + F.lit(90.0)) * F.lit(ni / 180.0)).cast("long"),
-        F.lit(0).cast("long")), F.lit(ni - 1).cast("long"))
-    ilo = F.least(F.greatest(F.floor(
-        (F.col(lon) + F.lit(180.0)) * F.lit(nj / 360.0)).cast("long"),
-        F.lit(0).cast("long")), F.lit(nj - 1).cast("long"))
+    ila, ilo = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
     cells = (df.select(ila.alias("i"), ilo.alias("j"))
              .groupBy("i", "j").agg(F.count("*").alias("n"))
              .persist())
@@ -2386,12 +2402,7 @@ def geary_c(df: DataFrame, lat: str = "lat", lon: str = "lon",
     from . import cache
 
     ni, nj = 1 << lat_bits, 1 << lon_bits
-    ila = F.least(F.greatest(F.floor(
-        (F.col(lat) + F.lit(90.0)) * F.lit(ni / 180.0)).cast("long"),
-        F.lit(0).cast("long")), F.lit(ni - 1).cast("long"))
-    ilo = F.least(F.greatest(F.floor(
-        (F.col(lon) + F.lit(180.0)) * F.lit(nj / 360.0)).cast("long"),
-        F.lit(0).cast("long")), F.lit(nj - 1).cast("long"))
+    ila, ilo = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
     cells = (df.select(ila.alias("i"), ilo.alias("j"))
              .groupBy("i", "j").agg(F.count("*").alias("n"))
              .persist())
@@ -2808,12 +2819,7 @@ def emerging_gi_trend(df: DataFrame, lat: str = "lat", lon: str = "lon",
 
     ni, nj = 1 << lat_bits, 1 << lon_bits
     nlat = ni * nj
-    ila = F.least(F.greatest(F.floor(
-        (F.col(lat) + F.lit(90.0)) * F.lit(ni / 180.0)).cast("long"),
-        F.lit(0).cast("long")), F.lit(ni - 1).cast("long"))
-    ilo = F.least(F.greatest(F.floor(
-        (F.col(lon) + F.lit(180.0)) * F.lit(nj / 360.0)).cast("long"),
-        F.lit(0).cast("long")), F.lit(nj - 1).cast("long"))
+    ila, ilo = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
     cells = (df.select(ila.alias("i"), ilo.alias("j"),
                        F.expr(f"{t} div 86400").alias("day"))
              .groupBy("day", "i", "j").agg(F.count("*").alias("n"))
@@ -3000,12 +3006,7 @@ def local_morans(df: DataFrame, lat: str = "lat", lon: str = "lon",
     from . import cache
 
     ni, nj = 1 << lat_bits, 1 << lon_bits
-    ila = F.least(F.greatest(F.floor(
-        (F.col(lat) + F.lit(90.0)) * F.lit(ni / 180.0)).cast("long"),
-        F.lit(0).cast("long")), F.lit(ni - 1).cast("long"))
-    ilo = F.least(F.greatest(F.floor(
-        (F.col(lon) + F.lit(180.0)) * F.lit(nj / 360.0)).cast("long"),
-        F.lit(0).cast("long")), F.lit(nj - 1).cast("long"))
+    ila, ilo = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
     cells = (df.select(ila.alias("i"), ilo.alias("j"))
              .groupBy("i", "j").agg(F.count("*").alias("n"))
              .persist())

@@ -264,14 +264,13 @@ def _axis_bits(nchars: int) -> tuple[int, int]:
     return lat_bits, lon_bits
 
 
-def _lat_idx(lat: np.ndarray, bits: int) -> np.ndarray:
-    c = (1 << bits) / 180.0
-    return np.clip(np.floor((lat + 90.0) * c).astype(np.int64), 0, (1 << bits) - 1)
-
-
-def _lon_idx(lon: np.ndarray, bits: int) -> np.ndarray:
-    c = (1 << bits) / 360.0
-    return np.clip(np.floor((lon + 180.0) * c).astype(np.int64), 0, (1 << bits) - 1)
+def _axis_idx(v: np.ndarray, off: float, span: float, bits: int) -> np.ndarray:
+    """Clamped floor-lattice index on ``1 << bits`` cells of ``span``
+    degrees: clipped in float before the cast, so +-inf saturate to the
+    end cells (as Spark's ``floor`` does) and NaN maps to cell 0."""
+    n = 1 << bits
+    f = np.clip(np.floor((v + off) * (n / span)), 0, n - 1)
+    return np.where(np.isnan(f), 0.0, f).astype(np.int64)
 
 
 def decode_ij(cells, nchars: int | None = None):
@@ -320,7 +319,8 @@ def encode(lat, lon, nchars: int = 5) -> np.ndarray:
     lat = _as1d(lat)
     lon = _as1d(lon)
     lat_bits, lon_bits = _axis_bits(nchars)
-    return encode_ij(_lat_idx(lat, lat_bits), _lon_idx(lon, lon_bits), nchars)
+    return encode_ij(_axis_idx(lat, 90.0, 180.0, lat_bits),
+                     _axis_idx(lon, 180.0, 360.0, lon_bits), nchars)
 
 
 def cell_bounds(cells, nchars: int | None = None):

@@ -4,9 +4,8 @@ All UDFs are Series-in/Series-out vectorized (no per-row Python), per
 the engine contract.  Factories close over scalar parameters (precision,
 radius) so the hot path stays a single numpy call per Arrow batch.
 
-SQL registration: :func:`register` exposes the core kernel under
-``gh_*`` names for ``spark.sql`` users — the engine's equivalent of the
-reference's ``IMapInfo`` plugin ABI (/root/reference/GeoHash/imapinfo.h:12-22).
+Geohash cell assignment is not a UDF: ``engine.with_cell`` builds it
+natively on :func:`lattice_ij`.
 """
 
 from __future__ import annotations
@@ -15,22 +14,11 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, StringType
 
 from .kernel import geohash_np as gh
 from .kernel import s2_np, tiles_np
-
-
-def geohash_udf(nchars: int = 5):
-    """Canonical geohash encode at ``nchars`` chars (production path)."""
-
-    @pandas_udf(StringType())
-    def _enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(gh.encode(lat.to_numpy(np.float64), lon.to_numpy(np.float64), nchars))
-
-    return _enc
 
 
 def geohash_ref_udf(nbits: int = gh.GEO_PRECISION_BITS):
@@ -56,19 +44,6 @@ def haversine_col(lat1, lon1, lat2, lon2):
          + F.cos(la1) * F.cos(la2) * F.pow(F.sin((lo2 - lo1) / 2), 2))
     return (F.lit(2.0 * gh.EARTH_RADIUS_M)
             * F.asin(F.sqrt(F.greatest(F.lit(0.0), F.least(F.lit(1.0), a)))))
-
-
-def haversine_udf():
-    """Correct great-circle meters (pandas-UDF form, for callers that
-    need the numpy kernel; the engine hot path uses :func:`haversine_col`)."""
-
-    @pandas_udf(DoubleType())
-    def _dist(lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series) -> pd.Series:
-        return pd.Series(gh.haversine_m(
-            lat1.to_numpy(np.float64), lon1.to_numpy(np.float64),
-            lat2.to_numpy(np.float64), lon2.to_numpy(np.float64)))
-
-    return _dist
 
 
 def distance_ref_udf():
@@ -101,17 +76,6 @@ def bbox_ref_udf():
                              "min_lon": mnlo, "max_lon": mxlo})
 
     return _bbox
-
-
-def neighbors_udf(include_self: bool = False):
-    """Correct 8-ring neighbors of a geohash cell -> array<string>."""
-
-    @pandas_udf(ArrayType(StringType()))
-    def _nbrs(cells: pd.Series) -> pd.Series:
-        out = gh.neighbors(cells.to_numpy(), include_self=include_self)
-        return pd.Series([list(a) for a in out])
-
-    return _nbrs
 
 
 def neighbors_ref_udf(nbits: int = gh.GEO_PRECISION_BITS):
@@ -189,37 +153,6 @@ def annulus_cells_udf(nchars: int, r_lo: int, r_hi: int):
         return pd.Series([[c for c in row if c is not None] for row in stacked])
 
     return _ann
-
-
-def disk_cells_udf(nchars: int, ring: int):
-    """(lat, lon) -> array of the (2*ring+1)^2 cells of the Chebyshev
-    disk around the point's cell at ``nchars`` — the candidate
-    generator for the BULK kNN join (engine.knn_join_bulk), exploded
-    query-side so candidate generation is fully distributed.
-    Vectorized: one encode per offset over the whole Arrow batch."""
-
-    @pandas_udf(ArrayType(StringType()))
-    def _disk(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la = lat.to_numpy(np.float64)
-        lo = lon.to_numpy(np.float64)
-        i_lat, i_lon, _ = gh.decode_ij(gh.encode(la, lo, nchars))
-        lat_bits, lon_bits = gh._axis_bits(nchars)
-        nlat = 1 << lat_bits
-        nlon = 1 << lon_bits
-        cols = []
-        for dla in range(-ring, ring + 1):
-            for dlo in range(-ring, ring + 1):
-                la_i = i_lat + dla
-                lo_i = (i_lon + dlo) % nlon
-                ok = (la_i >= 0) & (la_i < nlat)
-                s = np.empty(la.shape[0], dtype=object)
-                s[ok] = gh.encode_ij(la_i[ok], lo_i[ok], nchars)
-                s[~ok] = None
-                cols.append(s)
-        stacked = np.stack(cols, axis=1)
-        return pd.Series([[c for c in row if c is not None] for row in stacked])
-
-    return _disk
 
 
 def eps_cover_cells_udf(nchars: int, eps_m: float):
@@ -357,43 +290,39 @@ def hilbert_udf(order: int = 8):
     return _hd
 
 
-def register(spark: SparkSession) -> None:
-    """Register the kernel for spark.sql use (UDF registry = the engine's
-    extension surface)."""
-    spark.udf.register("gh_encode5", geohash_udf(5))
-    spark.udf.register("gh_encode7", geohash_udf(7))
-    spark.udf.register("gh_encode_ref12", geohash_ref_udf(12))
-    spark.udf.register("gh_haversine_m", haversine_udf())
-    spark.udf.register("gh_distance_ref", distance_ref_udf())
-    spark.udf.register("gh_neighbors", neighbors_udf())
-    spark.udf.register("gh_neighbors_ref12", neighbors_ref_udf(12))
-    spark.udf.register("gh_bbox_ref", bbox_ref_udf())
-    spark.udf.register("gh_candidate_cells_ref", candidate_cells_ref_udf())
-    spark.udf.register("gh_decode", decode_udf())
-    spark.udf.register("gh_s2_cell10", s2_cell_udf(10))
-    spark.udf.register("gh_hex_cell6", hex_cell_udf(6))
-    spark.udf.register("gh_tile12", tile_udf(12))
-    spark.udf.register("gh_hilbert8", hilbert_udf(8))
+def lattice_ij(lat, lon, lat_bits: int, lon_bits: int):
+    """(lat, lon) columns -> the clamped floor-lattice indices ``(i, j)``
+    on a ``2^lat_bits x 2^lon_bits`` grid, each ONE native expression
+    ``least(greatest(floor((x + off) * n/span), 0), n - 1)`` — the
+    canonical geohash axis rule of ``geohash_np.encode``: +-inf
+    saturate to the end cells; NULL and NaN land in cell 0."""
+    from pyspark.sql import functions as F
+
+    def idx(x, off, span, n):
+        return F.least(F.greatest(F.floor((x + F.lit(off)) * F.lit(n / span)).cast("long"),
+                                  F.lit(0).cast("long")), F.lit(n - 1).cast("long"))
+
+    return idx(lat, 90.0, 180.0, 1 << lat_bits), idx(lon, 180.0, 360.0, 1 << lon_bits)
 
 
-def morton_col(ix, iy, bits: int = 8):
-    """Morton / Z-order interleave of two ``bits``-bit grid coordinates
-    as ONE native column expression (the shift-or bit spread — no UDF,
-    stays inside whole-stage codegen).  The Z-order counterpart of
+def morton_col(ix, iy):
+    """Morton / Z-order interleave of two grid coordinates of up to 32
+    bits each as ONE native column expression (the 5-step shift-or bit
+    spread over 64-bit masks — no UDF, stays inside whole-stage
+    codegen); ``ix`` takes the even bits.  The Z-order counterpart of
     :func:`hilbert_udf`: cheaper to compute (pure bit mixing, no
     quadrant rotations) but with strictly worse bucket locality —
     quadrant seams fragment ranges — which q170 measures as a gated
-    fact rather than asserting.  Only ``bits=8`` masks are unrolled
-    (the 256x256 locality grid the Hilbert index uses)."""
-    if bits != 8:
-        raise ValueError("morton_col unrolls masks for bits=8 only")
+    fact rather than asserting.  Two 32-bit inputs fill all 64 bits,
+    so the top bit wraps to the sign."""
     from pyspark.sql import functions as F
 
     def spread(c):
         x = c.cast("long")
-        x = x.bitwiseOR(F.shiftleft(x, 4)).bitwiseAND(F.lit(0x0F0F))
-        x = x.bitwiseOR(F.shiftleft(x, 2)).bitwiseAND(F.lit(0x3333))
-        x = x.bitwiseOR(F.shiftleft(x, 1)).bitwiseAND(F.lit(0x5555))
+        for shift, mask in ((16, 0x0000FFFF0000FFFF), (8, 0x00FF00FF00FF00FF),
+                            (4, 0x0F0F0F0F0F0F0F0F), (2, 0x3333333333333333),
+                            (1, 0x5555555555555555)):
+            x = x.bitwiseOR(F.shiftleft(x, shift)).bitwiseAND(F.lit(mask))
         return x
 
-    return spread(ix).bitwiseOR(F.shiftleft(spread(iy), 1)).cast("long")
+    return spread(ix).bitwiseOR(F.shiftleft(spread(iy), 1))

@@ -1,7 +1,11 @@
 """Golden-vector tests for the compat kernel vs the compiled reference
-(FIXTURES.md §2) plus sanity tests for the production kernel."""
+(FIXTURES.md §2) plus sanity tests for the production kernel, and
+native ``engine.with_cell`` checked against it."""
+
+import warnings
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from geotile.kernel import geohash_np as gh
@@ -245,8 +249,6 @@ def test_point_in_polygon():
 def test_point_in_polygon_horizontal_edge_on_query_latitude():
     """Horizontal edges lying ON query latitudes: the ray cast gives
     the booleans of the unguarded formula, without a RuntimeWarning."""
-    import warnings
-
     # an L-shape: horizontal edges at lat 0, 1 and 2
     poly_lat = [0.0, 0.0, 1.0, 1.0, 2.0, 2.0]
     poly_lon = [0.0, 2.0, 2.0, 1.0, 1.0, 0.0]
@@ -278,3 +280,75 @@ def test_haversine_sanity():
     d = gh.haversine_m(39.928167, 116.389550, 39.928667, 116.389550)[0]
     assert d == pytest.approx(55.613, abs=0.01)
     assert gh.haversine_m(0, 0, 0, 0)[0] == 0.0
+
+
+# ---------------------------------------------------------------------------
+# Native engine.with_cell (Catalyst expressions) vs the kernel
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def random_points(spark):
+    rng = np.random.default_rng(7)
+    lat = np.concatenate([rng.uniform(-90, 90, 100_000),
+                          np.linspace(-90, 90, 1025), [90.0, -90.0, 0.0, -0.0] * 2])
+    lon = np.concatenate([rng.uniform(-180, 180, 100_000),
+                          np.linspace(-180, 180, 1025), [180.0, -180.0, 180.0, -180.0,
+                                                         -0.0, 0.0, 180.0, -180.0]])
+    pdf = pd.DataFrame({"id": np.arange(lat.shape[0]), "lat": lat, "lon": lon})
+    df = spark.createDataFrame(pdf).cache()
+    yield pdf, df
+    df.unpersist()
+
+
+@pytest.mark.parametrize("nchars", range(1, 13))
+def test_native_with_cell_matches_encode(random_points, nchars):
+    from geotile import engine
+
+    pdf, df = random_points
+    got = engine.with_cell(df, nchars=nchars).orderBy("id").toPandas()
+    want = gh.encode(pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), nchars)
+    assert (got["geohash"].to_numpy() == want).all()
+
+
+def test_native_with_cell_edges_match_encode(spark):
+    """null and NaN land in cell 0 of their axis, +-inf and out-of-range
+    values clamp to the end cells, on both paths and without a warning."""
+    from geotile import engine
+
+    edge = [None, float("nan"), float("inf"), float("-inf"), 90.0, -90.0,
+            180.0, -180.0, -0.0, 91.0, 200.0, -200.0]
+    rows = [(a, b) for a in edge for b in edge]
+    df = spark.createDataFrame(rows, "lat double, lon double")
+    nan = [(np.nan if a is None else a, np.nan if b is None else b) for a, b in rows]
+    lat, lon = np.array(nan).T
+    for nchars in (1, 5, 12):
+        got = [r["geohash"] for r in engine.with_cell(df, nchars=nchars).collect()]
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            want = gh.encode(lat, lon, nchars)
+        assert got == list(want), nchars
+    assert gh.encode(np.inf, 0.0, 5)[0] == "upbpb"  # north edge, not 'h0000'
+    assert gh.encode(np.nan, np.nan, 5)[0] == "00000"
+
+
+def test_native_with_cell_pushed_filter_compiles(spark):
+    """A filter on the cell is pushed below the projection and inlines the
+    whole encoder over computed coordinates; it must still compile."""
+    from pyspark.sql import functions as F
+
+    from geotile import engine
+
+    pts = spark.range(2000).select(
+        (((F.col("id") * 7919 + 11) % 160000) / F.lit(1000.0) - 80.0).alias("lat"),
+        (((F.col("id") * 104729 + 5) % 340000) / F.lit(1000.0) - 170.0).alias("lon"))
+    old = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")  # fail, don't interpret
+    try:
+        got = (engine.with_cell(pts, nchars=12)
+               .where(F.substring("geohash", 1, 1).isin("7", "k", "s")).toPandas())
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", old)
+    pdf = pts.toPandas()
+    want = gh.encode(pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), 12)
+    assert sorted(got["geohash"]) == sorted(c for c in want if c[0] in "7ks")

@@ -141,12 +141,14 @@ def test_morton_col_matches_reference(spark):
 
     def ref(x, y):
         m = 0
-        for b in range(8):
+        for b in range(32):
             m |= ((x >> b) & 1) << (2 * b) | ((y >> b) & 1) << (2 * b + 1)
-        return m
+        return m - (1 << 64) if m >= 1 << 63 else m  # two's-complement long
 
     pts = [(x, y) for x in range(0, 256, 7) for y in range(0, 256, 11)]
     pts += [(0, 0), (255, 255), (255, 0), (0, 255), (170, 85)]
+    pts += [(2**30 - 1, 0), (0, 2**30 - 1), (2**30 - 1, 2**30 - 1), (123456789, 987654321),
+            (2**32 - 1, 0), (0, 2**32 - 1), (2**32 - 1, 2**32 - 1), (2**31, 2**31 + 1)]
     df = spark.createDataFrame(pts, "ix long, iy long")
     got = {(r["ix"], r["iy"]): r["m"]
            for r in df.withColumn(

@@ -101,6 +101,7 @@ def _operators(spark, points):
         "pip_join": engine.pip_join(points, polys),
         "raster_vector_join": engine.raster_vector_join(
             points, [(10, int(tx[0]), int(ty[0]))]),
+        "with_cell": engine.with_cell(points, nchars=7, out="gh7"),
     }
 
 
@@ -116,6 +117,7 @@ def test_cover_prunes_gh2_partitions(spark, points, op):
 
 @pytest.mark.parametrize("op,python", [
     ("radius_search", False), ("radius_join", False), ("raster_vector_join", False),
+    ("with_cell", False),
     ("pip_join", True),  # the ray-cast refine is a numpy kernel
 ])
 def test_refine_python_only_where_a_kernel_needs_it(spark, points, op, python):

@@ -11,6 +11,7 @@ so they sit under the exact SQL oracle gate (q76/q77).
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -67,9 +68,7 @@ def funnel(events: DataFrame, steps: Sequence[str], ts_col: str = "ep",
               .select(F.lit(i + 1).alias("step_idx"), F.lit(s).alias("step"),
                       "n_users")
               for i, (s, f) in enumerate(zip(steps, frames))]
-    out = counts[0]
-    for c in counts[1:]:
-        out = out.unionByName(c)
+    out = reduce(DataFrame.unionByName, counts)
     return out
 
 

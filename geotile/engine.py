@@ -19,6 +19,7 @@ Plan-shape discipline (SURVEY.md §4):
 from __future__ import annotations
 
 import math
+from functools import reduce
 from typing import Iterable, Sequence
 
 import numpy as np
@@ -308,9 +309,7 @@ def _radius_cover_join(positions: DataFrame, queries, nchars: int = DEFAULT_NCHA
                 .withColumn(qlon, F.lit(None).cast("double"))
                 .withColumn(radius, F.lit(None).cast("double"))
                 .withColumn("dist_m", F.lit(None).cast("double")))
-    joined = parts[0]
-    for p in parts[1:]:
-        joined = joined.unionByName(p)
+    joined = reduce(DataFrame.unionByName, parts)
     dist = udfs.haversine_col(F.col(qlat), F.col(qlon), F.col(lat), F.col(lon))
     return joined.withColumn("dist_m", dist)
 
@@ -647,9 +646,7 @@ def knn_join_bulk(positions: DataFrame, queries: DataFrame, k: int,
         need = int(info["need"]) if info["need"] is not None else 2 * ring
         prev_ring = ring
         ring = min(max_ring, max(2 * ring, need))
-    out = resolved_parts[0]
-    for p in resolved_parts[1:]:
-        out = out.unionByName(p)
+    out = reduce(DataFrame.unionByName, resolved_parts)
     # materialize once, then free the per-round caches (they would
     # otherwise accumulate for the life of the session); the small
     # result stays cached and is the caller's to release
@@ -699,9 +696,7 @@ def pip_join(points: DataFrame, polygons: DataFrame, nchars: int = DEFAULT_NCHAR
         parts.append(side.join(_maybe_broadcast(cov, len(rows), "pip_join cover"), key == cov["cell"], "inner").drop("cell"))
     if not parts:
         return points.where(F.lit(False)).withColumn(poly_id, F.lit(None).cast("long"))
-    j = parts[0]
-    for p in parts[1:]:
-        j = j.unionByName(p)
+    j = reduce(DataFrame.unionByName, parts)
 
     # polygon vertices travel in the UDF CLOSURE keyed by poly_id (the
     # dim side is small by contract) — the join never ships vertex
@@ -986,9 +981,7 @@ def _segment_candidates(points: DataFrame, lines: DataFrame, radius_m: float,
         parts.append(side.join(_maybe_broadcast(cov, len(rows), "polyline cover"), key == cov["cell"], "inner").drop("cell"))
     if not parts:
         return None
-    j = parts[0]
-    for p in parts[1:]:
-        j = j.unionByName(p)
+    j = reduce(DataFrame.unionByName, parts)
     return j
 
 
@@ -1172,9 +1165,7 @@ def raster_vector_join(points: DataFrame, tiles: Iterable[tuple[int, int, int]],
         if pp is not None:
             side = side.where(pp)
         parts.append(side.join(_maybe_broadcast(cover, len(rows), "raster_vector_join cover"), key == cover["cell"], "inner"))
-    j = parts[0]
-    for p in parts[1:]:
-        j = j.unionByName(p)
+    j = reduce(DataFrame.unionByName, parts)
     return (j.where((F.col("lat") >= F.col("t_mnla")) & (F.col("lat") < F.col("t_mxla"))
                     & (F.col("lon") >= F.col("t_mnlo")) & (F.col("lon") < F.col("t_mxlo")))
             .drop("cell", "t_mnla", "t_mxla", "t_mnlo", "t_mxlo"))
@@ -1354,6 +1345,87 @@ def salted_cell_counts(df: DataFrame, cell_col: str = "geohash", nsalt: int = 16
     return level1.groupBy(cell_col).agg(F.sum("_c").alias("n"))
 
 
+def _offsets(reach: int, center: bool) -> Column:
+    """The square stencil ``[-reach, reach]^2`` as an array literal of
+    ``(dy, dx)`` long structs, row-major; ``center=False`` leaves out
+    ``(0, 0)``.  Every grid neighbourhood in this module explodes it."""
+    r = range(-reach, reach + 1)
+    return F.array(*[F.struct(F.lit(dy).cast("long").alias("dy"),
+                              F.lit(dx).cast("long").alias("dx"))
+                     for dy in r for dx in r if center or (dy, dx) != (0, 0)])
+
+
+def _ring8(cells: DataFrame, ni: int, nj: int, i: str = "i", j: str = "j",
+           **carry: str) -> DataFrame:
+    """Sends each row of ``cells`` toward its 8 lattice neighbours: one
+    row per neighbour ``(ti, tj)`` with the ``carry`` columns renamed
+    (``out=source``).  Longitude wraps mod ``nj``; rows past a pole
+    (``ti`` outside ``[0, ni)``) are dropped, so polar cells send 5.
+    Callers join or aggregate on ``(ti, tj)``: an equi-join on shifted
+    integer keys, never a theta join."""
+    return (cells.select(i, j, *carry.values(), F.explode(_offsets(1, False)).alias("o"))
+            .select((F.col(i) + F.col("o.dy")).alias("ti"),
+                    F.pmod(F.col(j) + F.col("o.dx"), F.lit(nj)).alias("tj"),
+                    *[F.col(src).alias(out) for out, src in carry.items()])
+            .where((F.col("ti") >= 0) & (F.col("ti") < ni)))
+
+
+def _lattice_counts(df: DataFrame, lat: str, lon: str, lat_bits: int,
+                    lon_bits: int, *by: str) -> DataFrame:
+    """Points per occupied ``udfs.lattice_ij`` cell (and ``by`` key):
+    ``(*by, i, j, n)`` — the one data-sized aggregate of the lattice
+    statistics; every later frame is occupied-cell sized."""
+    i, j = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
+    return (df.select(*by, i.alias("i"), j.alias("j"))
+            .groupBy(*by, "i", "j").agg(F.count("*").alias("n")))
+
+
+def _bucket_pairs(pts: DataFrame, size: int, *extra: str) -> DataFrame:
+    """The 3x3 bucketed candidate self-join of a milli-degree point
+    frame ``(pid, px, py, *extra)``: each point ``a`` explodes to the
+    9 ``size``-wide buckets around its own and meets every point ``b``
+    homed in one of them (itself included), so every pair within
+    ``size`` on both axes is a candidate, once per order.  Returns ``(ida, idb,
+    <c>a, <c>b for c in extra, d2)`` with the exact BIGINT squared
+    distance ``d2``; callers filter on id order and ``d2``."""
+    home = pts.select(
+        "pid", "px", "py", *extra,
+        F.floor(F.col("px") / F.lit(float(size))).cast("long").alias("cx"),
+        F.floor(F.col("py") / F.lit(float(size))).cast("long").alias("cy"))
+    a = (home.select(F.col("pid").alias("ida"), F.col("px").alias("xa"),
+                     F.col("py").alias("ya"), *[F.col(c).alias(c + "a") for c in extra],
+                     "cx", "cy", F.explode(_offsets(1, True)).alias("o"))
+         .select("ida", "xa", "ya", *[c + "a" for c in extra],
+                 (F.col("cx") + F.col("o.dx")).alias("tx"),
+                 (F.col("cy") + F.col("o.dy")).alias("ty")))
+    b = home.select(F.col("pid").alias("idb"), F.col("px").alias("xb"),
+                    F.col("py").alias("yb"), *[F.col(c).alias(c + "b") for c in extra],
+                    F.col("cx").alias("tx"), F.col("cy").alias("ty"))
+    dx, dy = F.col("xa") - F.col("xb"), F.col("ya") - F.col("yb")
+    return a.join(b, ["tx", "ty"]).withColumn("d2", dx * dx + dy * dy)
+
+
+def _gi_star(cells: DataFrame, ni: int, nj: int) -> DataFrame:
+    """Adds the Getis-Ord Gi* columns ``w``, ``num`` and ``gi_micro``
+    to per-cell rows carrying ``(i, n, n_ring, s_pts, ss)`` on an
+    ``ni x nj`` lattice (construction and exactness: :func:`getis_ord`)."""
+    nlat = ni * nj
+    big_n = F.lit(nlat).cast("long")
+    w = (F.when((F.col("i") > 0) & (F.col("i") < ni - 1), F.lit(9))
+         .otherwise(F.lit(6))).cast("long")
+    num = big_n * (F.col("n") + F.col("n_ring")) - F.col("w") * F.col("s_pts")
+    aa = big_n * F.col("ss") - F.col("s_pts") * F.col("s_pts")
+    bb = big_n * F.col("w") - F.col("w") * F.col("w")
+    gi = (F.when(aa > 0,
+                 F.floor(F.lit(1000000.0)
+                         * (F.col("num").cast("double")
+                            / F.sqrt((aa.cast("double") * bb.cast("double"))
+                                     / F.lit(float(nlat - 1))))))
+          .otherwise(F.lit(0))).cast("long")
+    return (cells.withColumn("w", w).withColumn("num", num)
+            .withColumn("gi_micro", gi))
+
+
 def cell_density_smooth(df: DataFrame, lat: str = "lat", lon: str = "lon",
                         lat_bits: int = 6, lon_bits: int = 7) -> DataFrame:
     """8-neighbor cell density smoothing — the Getis-Ord-style local
@@ -1374,20 +1446,9 @@ def cell_density_smooth(df: DataFrame, lat: str = "lat", lon: str = "lon",
     from . import cache
 
     ni, nj = 1 << lat_bits, 1 << lon_bits
-    ila, ilo = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
-    cells = (df.select(ila.alias("i"), ilo.alias("j"))
-             .groupBy("i", "j").agg(F.count("*").alias("n"))
-             .persist())
-    offs = F.array(*[F.struct(F.lit(di).cast("long").alias("di"),
-                              F.lit(dj).cast("long").alias("dj"))
-                     for di in (-1, 0, 1) for dj in (-1, 0, 1)
-                     if not (di == 0 and dj == 0)])
-    contrib = (cells.select("i", "j", "n", F.explode(offs).alias("o"))
-               .select((F.col("i") + F.col("o.di")).alias("ti"),
-                       F.pmod(F.col("j") + F.col("o.dj"), F.lit(nj)).alias("tj"),
-                       "n")
-               .where((F.col("ti") >= 0) & (F.col("ti") < ni)))
-    ring = (contrib.groupBy("ti", "tj").agg(F.sum("n").alias("n_ring")))
+    cells = _lattice_counts(df, lat, lon, lat_bits, lon_bits).persist()
+    ring = (_ring8(cells, ni, nj, n="n")
+            .groupBy("ti", "tj").agg(F.sum("n").alias("n_ring")))
     out = (cells.join(ring, (cells["i"] == ring["ti"]) & (cells["j"] == ring["tj"]),
                       "left")
            .select("i", "j", "n",
@@ -1425,23 +1486,12 @@ def morans_i(df: DataFrame, lat: str = "lat", lon: str = "lon",
     from . import cache
 
     ni, nj = 1 << lat_bits, 1 << lon_bits
-    ila, ilo = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
-    cells = (df.select(ila.alias("i"), ilo.alias("j"))
-             .groupBy("i", "j").agg(F.count("*").alias("n"))
-             .persist())
+    cells = _lattice_counts(df, lat, lon, lat_bits, lon_bits).persist()
     st = cells.agg(F.count("*").alias("n_cells"), F.sum("n").alias("s_pts"))
     z = (cells.crossJoin(F.broadcast(st))
          .select("i", "j",
                  (F.col("n_cells") * F.col("n") - F.col("s_pts")).alias("z")))
-    offs = F.array(*[F.struct(F.lit(di).cast("long").alias("di"),
-                              F.lit(dj).cast("long").alias("dj"))
-                     for di in (-1, 0, 1) for dj in (-1, 0, 1)
-                     if not (di == 0 and dj == 0)])
-    a = (z.select("i", "j", "z", F.explode(offs).alias("o"))
-         .select((F.col("i") + F.col("o.di")).alias("ti"),
-                 F.pmod(F.col("j") + F.col("o.dj"), F.lit(nj)).alias("tj"),
-                 F.col("z").alias("za"))
-         .where((F.col("ti") >= 0) & (F.col("ti") < ni)))
+    a = _ring8(z, ni, nj, za="z")
     b = z.select(F.col("i").alias("ti"), F.col("j").alias("tj"),
                  F.col("z").alias("zb"))
     ed = a.join(b, ["ti", "tj"]).agg(
@@ -1497,26 +1547,11 @@ def getis_ord(df: DataFrame, lat: str = "lat", lon: str = "lon",
     ``(i, j, n, n_ring, w, num, gi_micro)``, NULL-free."""
     from . import cache
 
-    ni, nj = 1 << lat_bits, 1 << lon_bits
-    nlat = ni * nj
     base = cell_density_smooth(df, lat, lon, lat_bits, lon_bits).persist()
     st = base.agg(F.sum("n").alias("s_pts"),
                   F.sum(F.col("n") * F.col("n")).alias("ss"))
-    w = (F.when((F.col("i") > 0) & (F.col("i") < ni - 1), F.lit(9))
-         .otherwise(F.lit(6))).cast("long")
-    big_n = F.lit(nlat).cast("long")
-    jn = base.crossJoin(F.broadcast(st)).withColumn("w", w)
-    num = big_n * (F.col("n") + F.col("n_ring")) - F.col("w") * F.col("s_pts")
-    aa = big_n * F.col("ss") - F.col("s_pts") * F.col("s_pts")
-    bb = big_n * F.col("w") - F.col("w") * F.col("w")
-    gi = (F.when(aa > 0,
-                 F.floor(F.lit(1000000.0)
-                         * (num.cast("double")
-                            / F.sqrt((aa.cast("double") * bb.cast("double"))
-                                     / F.lit(float(nlat - 1))))))
-          .otherwise(F.lit(0))).cast("long")
-    out = jn.select("i", "j", "n", "n_ring", "w",
-                    num.alias("num"), gi.alias("gi_micro"))
+    out = (_gi_star(base.crossJoin(F.broadcast(st)), 1 << lat_bits, 1 << lon_bits)
+           .select("i", "j", "n", "n_ring", "w", "num", "gi_micro"))
     return cache.track(out, [base] + getattr(base, "_geotile_persisted", []))
 
 
@@ -1777,9 +1812,7 @@ def polygon_fill(polygons: DataFrame, scale: int = 2,
     if not parts:
         schema = f"{poly_id} long, ilat long, ilon long"
         return spark.createDataFrame([], schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = reduce(DataFrame.unionByName, parts)
     return out
 
 
@@ -2013,9 +2046,7 @@ def adaptive_cover(df: DataFrame, threshold: int, p_min: int = 1,
                      .select("cell", "n"))
         keeps.append(keep.select(
             "cell", F.lit(p).cast("long").alias("precision"), "n"))
-    out = keeps[0]
-    for k in keeps[1:]:
-        out = out.unionByName(k)
+    out = reduce(DataFrame.unionByName, keeps)
     from . import cache
 
     return cache.track(out, [fine])
@@ -2193,20 +2224,9 @@ def heat_peaks(df: DataFrame, lat: str = "lat", lon: str = "lon",
     from . import cache
 
     ni, nj = 1 << lat_bits, 1 << lon_bits
-    ila, ilo = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
-    cells = (df.select(ila.alias("i"), ilo.alias("j"))
-             .groupBy("i", "j").agg(F.count("*").alias("n"))
-             .persist())
-    offs = F.array(*[F.struct(F.lit(di).cast("long").alias("di"),
-                              F.lit(dj).cast("long").alias("dj"))
-                     for di in (-1, 0, 1) for dj in (-1, 0, 1)
-                     if not (di == 0 and dj == 0)])
-    contrib = (cells.select("i", "j", "n", F.explode(offs).alias("o"))
-               .select((F.col("i") + F.col("o.di")).alias("ti"),
-                       F.pmod(F.col("j") + F.col("o.dj"),
-                              F.lit(nj)).alias("tj"), "n")
-               .where((F.col("ti") >= 0) & (F.col("ti") < ni)))
-    ring = contrib.groupBy("ti", "tj").agg(F.max("n").alias("ring_max"))
+    cells = _lattice_counts(df, lat, lon, lat_bits, lon_bits).persist()
+    ring = (_ring8(cells, ni, nj, n="n")
+            .groupBy("ti", "tj").agg(F.max("n").alias("ring_max")))
     out = (cells.join(ring, (cells["i"] == ring["ti"])
                       & (cells["j"] == ring["tj"]), "left")
            .select("i", "j", "n",
@@ -2244,29 +2264,16 @@ def cell_blobs(df: DataFrame, lat: str = "lat", lon: str = "lon",
     rounds (O(log^2 n) over a shrinking edge set) until they fit."""
     from . import cache, graph
 
-    ny = int(math.ceil(180.0 / cell_deg))
-    nx = int(math.ceil(360.0 / cell_deg))
-    ybin = F.least(F.greatest(F.floor((F.col(lat) + F.lit(90.0)) / F.lit(cell_deg))
-                              .cast("long"), F.lit(0)), F.lit(ny - 1))
-    xbin = F.least(F.greatest(F.floor((F.col(lon) + F.lit(180.0)) / F.lit(cell_deg))
-                              .cast("long"), F.lit(0)), F.lit(nx - 1))
+    ybin, xbin, ny, nx = udfs.deg_bins(F.col(lat), F.col(lon), cell_deg)
     occ = (df.select(ybin.alias("y"), xbin.alias("x"))
            .groupBy("y", "x").agg(F.count("*").alias("n"))
            .where(F.col("n") >= int(min_count))
            .withColumn("cell_id", F.col("y") * 100000 + F.col("x"))
            .persist())
-    offs = F.array(*[F.struct(F.lit(dy).cast("long").alias("dy"),
-                              F.lit(dx).cast("long").alias("dx"))
-                     for dy in (-1, 0, 1) for dx in (-1, 0, 1)
-                     if not (dy == 0 and dx == 0)])
-    shifted = (occ.select("cell_id", "y", "x", F.explode(offs).alias("o"))
-               .select(F.col("cell_id").alias("a"),
-                       (F.col("y") + F.col("o.dy")).alias("ty"),
-                       F.pmod(F.col("x") + F.col("o.dx"), F.lit(nx)).alias("tx"))
-               .where((F.col("ty") >= 0) & (F.col("ty") < ny)))
     nbr = occ.select(F.col("cell_id").alias("b"),
-                     F.col("y").alias("ty"), F.col("x").alias("tx"))
-    edges = shifted.join(nbr, ["ty", "tx"]).select("a", "b")
+                     F.col("y").alias("ti"), F.col("x").alias("tj"))
+    edges = (_ring8(occ, ny, nx, "y", "x", a="cell_id")
+             .join(nbr, ["ti", "tj"]).select("a", "b"))
     labels = graph.connected_components(edges, src="a", dst="b")
     out = (occ.join(labels.withColumnRenamed("node", "cell_id"),
                     "cell_id", "left")
@@ -2402,23 +2409,12 @@ def geary_c(df: DataFrame, lat: str = "lat", lon: str = "lon",
     from . import cache
 
     ni, nj = 1 << lat_bits, 1 << lon_bits
-    ila, ilo = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
-    cells = (df.select(ila.alias("i"), ilo.alias("j"))
-             .groupBy("i", "j").agg(F.count("*").alias("n"))
-             .persist())
+    cells = _lattice_counts(df, lat, lon, lat_bits, lon_bits).persist()
     st = cells.agg(F.count("*").alias("n_cells"), F.sum("n").alias("s_pts"))
     z = (cells.crossJoin(F.broadcast(st))
          .select("i", "j", "n",
                  (F.col("n_cells") * F.col("n") - F.col("s_pts")).alias("z")))
-    offs = F.array(*[F.struct(F.lit(di).cast("long").alias("di"),
-                              F.lit(dj).cast("long").alias("dj"))
-                     for di in (-1, 0, 1) for dj in (-1, 0, 1)
-                     if not (di == 0 and dj == 0)])
-    a = (z.select("i", "j", "n", F.explode(offs).alias("o"))
-         .select((F.col("i") + F.col("o.di")).alias("ti"),
-                 F.pmod(F.col("j") + F.col("o.dj"), F.lit(nj)).alias("tj"),
-                 F.col("n").alias("na"))
-         .where((F.col("ti") >= 0) & (F.col("ti") < ni)))
+    a = _ring8(z, ni, nj, na="n")
     b = z.select(F.col("i").alias("ti"), F.col("j").alias("tj"),
                  F.col("n").alias("nb"))
     ed = a.join(b, ["ti", "tj"]).agg(
@@ -2476,35 +2472,14 @@ def ripley_pairs(df: DataFrame, radii_milli: Sequence[int],
     n_pairs)`` sorted by radius, zero-filled for empty radii."""
     rads = sorted(int(r) for r in radii_milli)
     rmax = rads[-1]
-    pts = df.select(
-        F.col("event_id").alias("pid"),
-        F.floor(F.col(lon) * F.lit(1000.0) + F.lit(0.5))
-        .cast("long").alias("px"),
-        F.floor(F.col(lat) * F.lit(1000.0) + F.lit(0.5))
-        .cast("long").alias("py"))
-    home = pts.select(
-        "pid", "px", "py",
-        F.floor(F.col("px") / F.lit(float(rmax))).cast("long").alias("cx"),
-        F.floor(F.col("py") / F.lit(float(rmax))).cast("long").alias("cy"))
-    offs = F.array(*[F.struct(F.lit(dx).cast("long").alias("dx"),
-                              F.lit(dy).cast("long").alias("dy"))
-                     for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    a = (home.select(F.col("pid").alias("ida"), F.col("px").alias("xa"),
-                     F.col("py").alias("ya"), "cx", "cy",
-                     F.explode(offs).alias("o"))
-         .select("ida", "xa", "ya",
-                 (F.col("cx") + F.col("o.dx")).alias("tx"),
-                 (F.col("cy") + F.col("o.dy")).alias("ty")))
-    b = home.select(F.col("pid").alias("idb"), F.col("px").alias("xb"),
-                    F.col("py").alias("yb"), F.col("cx").alias("tx"),
-                    F.col("cy").alias("ty"))
-    d2 = ((F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb"))
-          + (F.col("ya") - F.col("yb")) * (F.col("ya") - F.col("yb")))
+    pts = df.select(F.col("event_id").alias("pid"),
+                    udfs.milli(F.col(lon)).alias("px"),
+                    udfs.milli(F.col(lat)).alias("py"))
     # smallest-covering-radius CASE, built from the largest r inward
     rcase = F.lit(None).cast("long")
     for r in sorted(rads, reverse=True):
-        rcase = F.when(d2 <= F.lit(r * r), F.lit(r)).otherwise(rcase)
-    pairs = (a.join(b, ["tx", "ty"])
+        rcase = F.when(F.col("d2") <= F.lit(r * r), F.lit(r)).otherwise(rcase)
+    pairs = (_bucket_pairs(pts, rmax)
              .where(F.col("ida") < F.col("idb"))
              .select(rcase.cast("long").alias("r_at"))
              .where(F.col("r_at").isNotNull()))
@@ -2600,22 +2575,15 @@ def kde_heat(df: DataFrame, grid_milli: int = 500,
     mass it receives."""
     g, r = int(grid_milli), int(bandwidth_milli)
     reach = -(-r // g)  # ceil
-    pts = df.select(
-        F.floor(F.col(lon) * F.lit(1000.0) + F.lit(0.5))
-        .cast("long").alias("px"),
-        F.floor(F.col(lat) * F.lit(1000.0) + F.lit(0.5))
-        .cast("long").alias("py"))
+    pts = df.select(udfs.milli(F.col(lon)).alias("px"),
+                    udfs.milli(F.col(lat)).alias("py"))
     home = pts.withColumn(
         "cx", F.floor(F.col("px") / F.lit(float(g))).cast("long")) \
         .withColumn("cy", F.floor(F.col("py") / F.lit(float(g))).cast("long"))
     occ = (home.groupBy("cx", "cy").agg(F.count("*").alias("n_pts"))
            .persist())
-    offs = F.array(*[F.struct(F.lit(dx).cast("long").alias("dx"),
-                              F.lit(dy).cast("long").alias("dy"))
-                     for dx in range(-reach, reach + 1)
-                     for dy in range(-reach, reach + 1)])
     cand = (home.select("px", "py", "cx", "cy",
-                        F.explode(offs).alias("o"))
+                        F.explode(_offsets(reach, True)).alias("o"))
             .select("px", "py",
                     (F.col("cx") + F.col("o.dx")).alias("tx"),
                     (F.col("cy") + F.col("o.dy")).alias("ty")))
@@ -2663,35 +2631,12 @@ def nn_distance_hist(df: DataFrame, rmax_milli: int = 4000,
     minima (point-sized, no pair frame).  Returns ``(ring,
     n_points)``."""
     r2max = rmax_milli * rmax_milli
-    pts = df.select(
-        F.col("event_id").alias("pid"),
-        F.floor(F.col(lon) * F.lit(1000.0) + F.lit(0.5))
-        .cast("long").alias("px"),
-        F.floor(F.col(lat) * F.lit(1000.0) + F.lit(0.5))
-        .cast("long").alias("py"))
-    home = pts.select(
-        "pid", "px", "py",
-        F.floor(F.col("px") / F.lit(float(rmax_milli)))
-        .cast("long").alias("cx"),
-        F.floor(F.col("py") / F.lit(float(rmax_milli)))
-        .cast("long").alias("cy"))
-    offs = F.array(*[F.struct(F.lit(dx).cast("long").alias("dx"),
-                              F.lit(dy).cast("long").alias("dy"))
-                     for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    a = (home.select(F.col("pid").alias("ida"), F.col("px").alias("xa"),
-                     F.col("py").alias("ya"), "cx", "cy",
-                     F.explode(offs).alias("o"))
-         .select("ida", "xa", "ya",
-                 (F.col("cx") + F.col("o.dx")).alias("tx"),
-                 (F.col("cy") + F.col("o.dy")).alias("ty")))
-    b = home.select(F.col("pid").alias("idb"), F.col("px").alias("xb"),
-                    F.col("py").alias("yb"), F.col("cx").alias("tx"),
-                    F.col("cy").alias("ty"))
-    d2 = ((F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb"))
-          + (F.col("ya") - F.col("yb")) * (F.col("ya") - F.col("yb")))
-    mins = (a.join(b, ["tx", "ty"])
+    pts = df.select(F.col("event_id").alias("pid"),
+                    udfs.milli(F.col(lon)).alias("px"),
+                    udfs.milli(F.col(lat)).alias("py"))
+    mins = (_bucket_pairs(pts, rmax_milli)
             .where(F.col("ida") != F.col("idb"))
-            .select("ida", d2.alias("d2"))
+            .select("ida", "d2")
             .where(F.col("d2") <= F.lit(r2max))
             .groupBy("ida").agg(F.min("d2").alias("min_d2")))
     ring = F.floor(F.sqrt(F.col("min_d2").cast("double"))
@@ -2734,32 +2679,18 @@ def blob_threshold_profile(df: DataFrame, thresholds: Sequence[int],
     per contraction round."""
     from . import cache, graph
 
-    ny = int(math.ceil(180.0 / cell_deg))
-    nx = int(math.ceil(360.0 / cell_deg))
-    ybin = F.least(F.greatest(F.floor((F.col(lat) + F.lit(90.0)) / F.lit(cell_deg))
-                              .cast("long"), F.lit(0)), F.lit(ny - 1))
-    xbin = F.least(F.greatest(F.floor((F.col(lon) + F.lit(180.0)) / F.lit(cell_deg))
-                              .cast("long"), F.lit(0)), F.lit(nx - 1))
+    ybin, xbin, ny, nx = udfs.deg_bins(F.col(lat), F.col(lon), cell_deg)
     base = (df.select(ybin.alias("y"), xbin.alias("x"))
             .groupBy("y", "x").agg(F.count("*").alias("n"))
             .withColumn("cell_id", F.col("y") * 100000 + F.col("x"))
             .persist())
-    offs = F.array(*[F.struct(F.lit(dy).cast("long").alias("dy"),
-                              F.lit(dx).cast("long").alias("dx"))
-                     for dy in (-1, 0, 1) for dx in (-1, 0, 1)
-                     if not (dy == 0 and dx == 0)])
     parts = []
     for t in sorted(int(t) for t in thresholds):
         occ = base.where(F.col("n") >= t)
-        shifted = (occ.select("cell_id", "y", "x", F.explode(offs).alias("o"))
-                   .select(F.col("cell_id").alias("a"),
-                           (F.col("y") + F.col("o.dy")).alias("ty"),
-                           F.pmod(F.col("x") + F.col("o.dx"), F.lit(nx))
-                           .alias("tx"))
-                   .where((F.col("ty") >= 0) & (F.col("ty") < ny)))
         nbr = occ.select(F.col("cell_id").alias("b"),
-                         F.col("y").alias("ty"), F.col("x").alias("tx"))
-        edges = shifted.join(nbr, ["ty", "tx"]).select("a", "b")
+                         F.col("y").alias("ti"), F.col("x").alias("tj"))
+        edges = (_ring8(occ, ny, nx, "y", "x", a="cell_id")
+                 .join(nbr, ["ti", "tj"]).select("a", "b"))
         labels = graph.connected_components(edges, src="a", dst="b")
         lab = (occ.join(labels.withColumnRenamed("node", "cell_id"),
                         "cell_id", "left")
@@ -2780,9 +2711,7 @@ def blob_threshold_profile(df: DataFrame, thresholds: Sequence[int],
                .select("threshold", "n_occupied", "n_blobs",
                        "largest_cells", "largest_points"))
         parts.append(row)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = reduce(DataFrame.unionByName, parts)
     return cache.track(out, [base])
 
 
@@ -2818,28 +2747,12 @@ def emerging_gi_trend(df: DataFrame, lat: str = "lat", lon: str = "lon",
     from . import cache
 
     ni, nj = 1 << lat_bits, 1 << lon_bits
-    nlat = ni * nj
-    ila, ilo = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
-    cells = (df.select(ila.alias("i"), ilo.alias("j"),
-                       F.expr(f"{t} div 86400").alias("day"))
-             .groupBy("day", "i", "j").agg(F.count("*").alias("n"))
-             .persist())
-    offs = F.array(*[F.struct(F.lit(di).cast("long").alias("di"),
-                              F.lit(dj).cast("long").alias("dj"))
-                     for di in (-1, 0, 1) for dj in (-1, 0, 1)
-                     if not (di == 0 and dj == 0)])
-    ring = (cells.select("day", "i", "j", "n", F.explode(offs).alias("o"))
-            .select(F.col("day").alias("rday"),
-                    (F.col("i") + F.col("o.di")).alias("ti"),
-                    F.pmod(F.col("j") + F.col("o.dj"), F.lit(nj)).alias("tj"),
-                    "n")
-            .where((F.col("ti") >= 0) & (F.col("ti") < ni))
+    cells = _lattice_counts(df.withColumn("day", F.expr(f"{t} div 86400")),
+                            lat, lon, lat_bits, lon_bits, "day").persist()
+    ring = (_ring8(cells, ni, nj, rday="day", n="n")
             .groupBy("rday", "ti", "tj").agg(F.sum("n").alias("n_ring")))
     st = cells.groupBy("day").agg(F.sum("n").alias("s_pts"),
                                   F.sum(F.col("n") * F.col("n")).alias("ss"))
-    w = (F.when((F.col("i") > 0) & (F.col("i") < ni - 1), F.lit(9))
-         .otherwise(F.lit(6))).cast("long")
-    big_n = F.lit(nlat).cast("long")
     jn = (cells
           .join(ring, (F.col("day") == F.col("rday"))
                 & (F.col("i") == F.col("ti")) & (F.col("j") == F.col("tj")),
@@ -2847,19 +2760,10 @@ def emerging_gi_trend(df: DataFrame, lat: str = "lat", lon: str = "lon",
           .drop("rday", "ti", "tj")
           .withColumn("n_ring", F.coalesce("n_ring",
                                            F.lit(0).cast("long")))
-          .join(st, "day")
-          .withColumn("w", w))
-    num = big_n * (F.col("n") + F.col("n_ring")) - F.col("w") * F.col("s_pts")
-    aa = big_n * F.col("ss") - F.col("s_pts") * F.col("s_pts")
-    bb = big_n * F.col("w") - F.col("w") * F.col("w")
-    gi = (F.when(aa > 0,
-                 F.floor(F.lit(1000000.0)
-                         * (num.cast("double")
-                            / F.sqrt((aa.cast("double") * bb.cast("double"))
-                                     / F.lit(float(nlat - 1))))))
-          .otherwise(F.lit(0))).cast("long")
-    series = (jn.select((F.col("i") * 100000 + F.col("j")).alias("cell_id"),
-                        "day", gi.alias("gi_micro"))
+          .join(st, "day"))
+    series = (_gi_star(jn, ni, nj)
+              .select((F.col("i") * 100000 + F.col("j")).alias("cell_id"),
+                      "day", "gi_micro")
               .persist())
     a = series.select("cell_id", F.col("day").alias("di"),
                       F.col("gi_micro").alias("ga"))
@@ -2910,37 +2814,14 @@ def knox_test(df: DataFrame, space_milli: int = 2000,
     once under the id-order filter), fan-out bounded by points per
     time bucket.  The st census filters the SPATIAL candidate stream
     by dt map-side (no third join)."""
-    pts = df.select(
-        F.col("event_id").alias("pid"),
-        F.floor(F.col(lon) * F.lit(1000.0) + F.lit(0.5))
-        .cast("long").alias("px"),
-        F.floor(F.col(lat) * F.lit(1000.0) + F.lit(0.5))
-        .cast("long").alias("py"),
-        F.col(t).cast("long").alias("tt"))
-    home = pts.select(
-        "pid", "px", "py", "tt",
-        F.floor(F.col("px") / F.lit(float(space_milli)))
-        .cast("long").alias("cx"),
-        F.floor(F.col("py") / F.lit(float(space_milli)))
-        .cast("long").alias("cy"))
-    offs = F.array(*[F.struct(F.lit(dx).cast("long").alias("dx"),
-                              F.lit(dy).cast("long").alias("dy"))
-                     for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    a = (home.select(F.col("pid").alias("ida"), F.col("px").alias("xa"),
-                     F.col("py").alias("ya"), F.col("tt").alias("ta"),
-                     "cx", "cy", F.explode(offs).alias("o"))
-         .select("ida", "xa", "ya", "ta",
-                 (F.col("cx") + F.col("o.dx")).alias("tx"),
-                 (F.col("cy") + F.col("o.dy")).alias("ty")))
-    b = home.select(F.col("pid").alias("idb"), F.col("px").alias("xb"),
-                    F.col("py").alias("yb"), F.col("tt").alias("tb"),
-                    F.col("cx").alias("tx"), F.col("cy").alias("ty"))
-    d2 = ((F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb"))
-          + (F.col("ya") - F.col("yb")) * (F.col("ya") - F.col("yb")))
-    close_t = (F.abs(F.col("ta") - F.col("tb")) <= F.lit(int(time_s)))
-    sp = (a.join(b, ["tx", "ty"])
+    pts = df.select(F.col("event_id").alias("pid"),
+                    udfs.milli(F.col(lon)).alias("px"),
+                    udfs.milli(F.col(lat)).alias("py"),
+                    F.col(t).cast("long").alias("tt"))
+    close_t = (F.abs(F.col("tta") - F.col("ttb")) <= F.lit(int(time_s)))
+    sp = (_bucket_pairs(pts, space_milli, "tt")
           .where(F.col("ida") < F.col("idb"))
-          .where(d2 <= F.lit(space_milli * space_milli))
+          .where(F.col("d2") <= F.lit(space_milli * space_milli))
           .select(close_t.cast("long").alias("ct")))
     s_census = sp.agg(F.count("*").alias("s_pairs"),
                       F.sum("ct").alias("st_pairs"))
@@ -3006,24 +2887,13 @@ def local_morans(df: DataFrame, lat: str = "lat", lon: str = "lon",
     from . import cache
 
     ni, nj = 1 << lat_bits, 1 << lon_bits
-    ila, ilo = udfs.lattice_ij(F.col(lat), F.col(lon), lat_bits, lon_bits)
-    cells = (df.select(ila.alias("i"), ilo.alias("j"))
-             .groupBy("i", "j").agg(F.count("*").alias("n"))
-             .persist())
+    cells = _lattice_counts(df, lat, lon, lat_bits, lon_bits).persist()
     st = cells.agg(F.count("*").alias("n_cells"), F.sum("n").alias("s_pts"))
     z = (cells.crossJoin(F.broadcast(st))
          .select("i", "j", "n", "n_cells",
                  (F.col("n_cells") * F.col("n") - F.col("s_pts"))
                  .alias("zp")))
-    offs = F.array(*[F.struct(F.lit(di).cast("long").alias("di"),
-                              F.lit(dj).cast("long").alias("dj"))
-                     for di in (-1, 0, 1) for dj in (-1, 0, 1)
-                     if not (di == 0 and dj == 0)])
-    ring = (z.select("i", "j", "zp", F.explode(offs).alias("o"))
-            .select((F.col("i") + F.col("o.di")).alias("ti"),
-                    F.pmod(F.col("j") + F.col("o.dj"), F.lit(nj)).alias("tj"),
-                    F.col("zp").alias("zn"))
-            .where((F.col("ti") >= 0) & (F.col("ti") < ni))
+    ring = (_ring8(z, ni, nj, zn="zp")
             .groupBy("ti", "tj").agg(F.sum("zn").alias("ring_z")))
     dn = z.agg(F.sum(F.col("zp") * F.col("zp")).alias("den"))
     jn = (z.join(ring, (z["i"] == ring["ti"]) & (z["j"] == ring["tj"]),
@@ -3143,12 +3013,8 @@ def viewshed(df: DataFrame, n_observers: int = 4, radius: int = 6,
         return F.pmod(F.xxhash64(ycol * F.lit(1000) + xcol),
                       F.lit(int(elev_mod))).cast("long")
 
-    r = int(radius)
-    offs = F.array(*[F.struct(F.lit(dy).cast("long").alias("dy"),
-                              F.lit(dx).cast("long").alias("dx"))
-                     for dy in range(-r, r + 1) for dx in range(-r, r + 1)
-                     if not (dy == 0 and dx == 0)])
-    tgt = (obs.select("oy", "ox", "obs_cell", F.explode(offs).alias("o"))
+    tgt = (obs.select("oy", "ox", "obs_cell",
+                      F.explode(_offsets(int(radius), False)).alias("o"))
            .select("oy", "ox", "obs_cell",
                    (F.col("oy") + F.col("o.dy")).alias("ty"),
                    (F.col("ox") + F.col("o.dx")).alias("tx"),
@@ -3216,11 +3082,8 @@ def polygon_validity(polygons: DataFrame) -> DataFrame:
         "poly_id",
         F.posexplode(F.arrays_zip("poly_lat", "poly_lon"))
         .alias("i", "v"))
-        .select("poly_id", "i",
-                F.floor(F.col("v.poly_lon") * F.lit(1000.0) + F.lit(0.5))
-                .cast("long").alias("x"),
-                F.floor(F.col("v.poly_lat") * F.lit(1000.0) + F.lit(0.5))
-                .cast("long").alias("y")))
+        .select("poly_id", "i", udfs.milli(F.col("v.poly_lon")).alias("x"),
+                udfs.milli(F.col("v.poly_lat")).alias("y")))
     wseq = Window.partitionBy("poly_id").orderBy("i")
     wall = (Window.partitionBy("poly_id").orderBy("i")
             .rowsBetween(Window.unboundedPreceding,
@@ -3301,17 +3164,11 @@ def catchment_access(df: DataFrame, pois: Sequence[tuple],
     spark = df.sparkSession
     pdf = spark.createDataFrame(
         list(pois), "poi_id long, plat double, plon double, cap long")
-    pts = df.select(
-        F.col("event_id").alias("pid"),
-        F.floor(F.col(lon) * F.lit(1000.0) + F.lit(0.5))
-        .cast("long").alias("px"),
-        F.floor(F.col(lat) * F.lit(1000.0) + F.lit(0.5))
-        .cast("long").alias("py"))
-    pp = pdf.select("poi_id", "cap",
-                    F.floor(F.col("plon") * F.lit(1000.0) + F.lit(0.5))
-                    .cast("long").alias("qx"),
-                    F.floor(F.col("plat") * F.lit(1000.0) + F.lit(0.5))
-                    .cast("long").alias("qy"))
+    pts = df.select(F.col("event_id").alias("pid"),
+                    udfs.milli(F.col(lon)).alias("px"),
+                    udfs.milli(F.col(lat)).alias("py"))
+    pp = pdf.select("poi_id", "cap", udfs.milli(F.col("plon")).alias("qx"),
+                    udfs.milli(F.col("plat")).alias("qy"))
     r2 = int(radius_milli) * int(radius_milli)
     d2 = ((F.col("px") - F.col("qx")) * (F.col("px") - F.col("qx"))
           + (F.col("py") - F.col("qy")) * (F.col("py") - F.col("qy")))
@@ -3385,9 +3242,7 @@ def session_gap_sweep(df: DataFrame, gaps_s: Sequence[int],
                .select("gap_s", "n_sessions", "n_singletons",
                        "max_len", "med_len"))
         parts.append(row)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = reduce(DataFrame.unionByName, parts)
     return out
 
 
@@ -3488,9 +3343,7 @@ def debounce_audit(events: DataFrame, eps_ladder: Sequence[int] = (1, 10, 60),
                .select("eps_s", "n_events", "n_groups", "n_collapsed",
                        "max_burst"))
         parts.append(row)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = reduce(DataFrame.unionByName, parts)
     return out
 
 
@@ -3539,20 +3392,14 @@ def drainage_basins(df: DataFrame, radius: int = 12, elev_mod: int = 1000,
                       F.lit(int(elev_mod))).cast("long")
 
     r = int(radius)
-    offs = F.array(*[F.struct(F.lit(dy).cast("long").alias("dy"),
-                              F.lit(dx).cast("long").alias("dx"))
-                     for dy in range(-r, r + 1) for dx in range(-r, r + 1)])
-    grid = (obs.select("cy", "cx", F.explode(offs).alias("o"))
+    grid = (obs.select("cy", "cx", F.explode(_offsets(r, True)).alias("o"))
             .select("cy", "cx",
                     (F.col("cy") + F.col("o.dy")).alias("y"),
                     (F.col("cx") + F.col("o.dx")).alias("x"))
             .withColumn("e", elev(F.col("y"), F.col("x"))))
-    nbrs = [(dy, dx) for dy in (-1, 0, 1) for dx in (-1, 0, 1)
-            if (dy, dx) != (0, 0)]
-    cand = F.array(*[F.struct(
-        elev(F.col("y") + F.lit(dy), F.col("x") + F.lit(dx)).alias("e"),
-        F.lit(dy).cast("long").alias("dy"),
-        F.lit(dx).cast("long").alias("dx")) for dy, dx in nbrs])
+    cand = F.transform(_offsets(1, False), lambda o: F.struct(
+        elev(F.col("y") + o["dy"], F.col("x") + o["dx"]).alias("e"),
+        o["dy"].alias("dy"), o["dx"].alias("dx")))
     lower = F.filter(cand, lambda s: (
         (s["e"] < F.col("e"))
         & (F.abs(F.col("y") + s["dy"] - F.col("cy")) <= F.lit(r))
@@ -3815,9 +3662,7 @@ def greedy_dispatch(df: DataFrame, n_stores: int = 4, n_demands: int = 20,
                    & (F.col("demand_cell") != F.col("pd")))
             .drop("ps", "pd")
             .coalesce(1).localCheckpoint(eager=True))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = reduce(DataFrame.unionByName, parts)
     return out
 
 

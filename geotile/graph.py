@@ -27,6 +27,8 @@ driver.  Runs under the q61/q62 oracle gates.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -521,9 +523,7 @@ def kcore_peel(nodes: DataFrame, edges: DataFrame, k: int = 5,
         alive = scored.where(F.col("_deg") >= k).select("node")
     outs.append(alive.select(
         "node", F.lit(rounds).cast("long").alias("peel_round")))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
+    out = reduce(DataFrame.unionByName, outs)
     return cache.track(out, [und])
 
 
@@ -839,9 +839,7 @@ def boruvka_mst(edges: DataFrame, src: str = "u", dst: str = "v",
                 .coalesce(1).localCheckpoint(eager=True))
     if not parts:
         return e.where(F.lit(False)).select("u", "v", "w")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = reduce(DataFrame.unionByName, parts)
     return out.distinct()
 
 

@@ -19,20 +19,15 @@ are reproducible across runs and parallelism levels.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
-_MASK = (1 << 64) - 1
-
-
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    z = (x.astype(np.uint64) + np.uint64(0x9E3779B97F4A7C15)) & np.uint64(_MASK)
-    z = ((z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & np.uint64(_MASK)
-    z = ((z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & np.uint64(_MASK)
-    return z ^ (z >> np.uint64(31))
+from .textops import _splitmix64
 
 
 def _rand_unit(shape: tuple[int, ...], seed: int) -> np.ndarray:
@@ -813,12 +808,8 @@ def prefix_dim_recall(df: DataFrame, queries: list, dims=(4, 8, 16, 32, 64),
                              F.lit(int(d)).cast("long").alias("d"),
                              F.col(id_col)))
             pre_parts.append(top_d)
-    full = full_parts[0]
-    for p in full_parts[1:]:
-        full = full.unionByName(p)
-    pre = pre_parts[0]
-    for p in pre_parts[1:]:
-        pre = pre.unionByName(p)
+    full = reduce(DataFrame.unionByName, full_parts)
+    pre = reduce(DataFrame.unionByName, pre_parts)
     hits = (pre.join(full, ["query_id", id_col])
             .groupBy("query_id", "d").agg(F.count("*").alias("_h")))
     base = pre.select("query_id", "d").distinct()
@@ -848,8 +839,6 @@ def rbo_eval(df: DataFrame, queries: list, prefix_d: int = 8, k: int = 10,
     filter, the TakeOrdered shape); the depth expansion runs on
     queries x k rows.  Returns ``(query_id, ov_k, rbo_sum_micro,
     first_div)``."""
-    from functools import reduce
-
     parts = []
     for qid, qv in queries:
         wq = Window.orderBy(F.col("c").desc(), F.col(id_col).asc())
@@ -867,7 +856,7 @@ def rbo_eval(df: DataFrame, queries: list, prefix_d: int = 8, k: int = 10,
                      .select("query_id",
                              F.coalesce("apos", F.lit(99)).alias("apos"),
                              F.coalesce("bpos", F.lit(99)).alias("bpos")))
-    m = reduce(lambda x, y: x.unionByName(y), parts)
+    m = reduce(DataFrame.unionByName, parts)
     depths = m.select("query_id", "apos", "bpos",
                       F.explode(F.sequence(F.lit(1), F.lit(int(k))))
                       .alias("d"))

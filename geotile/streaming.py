@@ -24,6 +24,7 @@ same snapshot id.
 from __future__ import annotations
 
 import os
+from functools import reduce
 from typing import Iterator
 
 import pandas as pd
@@ -158,9 +159,7 @@ def radius_join_stream(updates: DataFrame, queries) -> DataFrame:
         key = F.col("geohash") if n == 5 else F.substring(F.col("geohash"), 1, n)
         parts.append(with_cell.join(F.broadcast(cov), key == cov["cell"], "inner")
                      .drop("cell"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = reduce(DataFrame.unionByName, parts)
     dist = udfs.haversine_col(F.col("qlat"), F.col("qlon"), F.col("lat"), F.col("lon"))
     return (out.withColumn("dist_m", dist)
             .where(F.col("dist_m") <= F.col("radius_m"))

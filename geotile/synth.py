@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .extract import extract_text_pd
+from .textops import _splitmix64
 
 # (name, lat, lon) — fixed public city coordinates, Zipf rank order
 CITIES = [
@@ -37,16 +38,6 @@ CITIES = [
 LANGS = ["en", "zh", "es", "fr", "de", "pt", "ru", "ja", "ar", "hi"]
 _WORDS = ("data web page city travel map local news guide info street view "
           "photo report market open source area place visit").split()
-
-_MASK = (1 << 64) - 1
-
-
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    """Counter-based deterministic 64-bit mixer (public splitmix64)."""
-    z = (x.astype(np.uint64) + np.uint64(0x9E3779B97F4A7C15)) & np.uint64(_MASK)
-    z = ((z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & np.uint64(_MASK)
-    z = ((z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & np.uint64(_MASK)
-    return z ^ (z >> np.uint64(31))
 
 
 def _u01(ids: np.ndarray, stream: int) -> np.ndarray:

@@ -14,6 +14,8 @@ the candidate pairs (tiny vs n^2).
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -2402,9 +2404,7 @@ def phrase_search(df: DataFrame, phrases, id_col: str = "doc_id",
                     .agg(F.count("*").alias("n_hits"))
                     .select(F.lit(" ".join(p)).alias("phrase"),
                             F.col(id_col), "n_hits"))
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
+    out = reduce(DataFrame.unionByName, legs)
     return cache.track(out, [post])
 
 
@@ -3223,9 +3223,7 @@ def ndcg_eval(df: DataFrame, queries: dict, k: int = 10,
         parts.append(top.withColumn("pos", F.row_number().over(wr))
                      .select(F.lit(int(qid)).cast("long").alias("qid"),
                              F.col(id_col).alias("doc_id"), "pos"))
-    ranked = parts[0]
-    for p in parts[1:]:
-        ranked = ranked.unionByName(p)
+    ranked = reduce(DataFrame.unionByName, parts)
     rel = F.pmod(F.xxhash64(F.col("doc_id") * F.lit(31) + F.col("qid")),
                  F.lit(int(rel_levels))).cast("long")
     g = (ranked.withColumn("rel", rel)
@@ -3490,9 +3488,7 @@ def ddsketch_quantiles(df: DataFrame, group_col: str = "source",
                        F.col("m.bucket").alias("bucket"),
                        F.col("m.cum_n").cast("long").alias("cum_n")))
         parts.append(hit)
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
+    out = reduce(DataFrame.unionByName, parts)
     return out
 
 
@@ -3526,9 +3522,7 @@ def map_mrr_eval(df: DataFrame, queries: dict, k: int = 10,
         parts.append(top.withColumn("pos", F.row_number().over(wr))
                      .select(F.lit(int(qid)).cast("long").alias("qid"),
                              F.col(id_col).alias("doc_id"), "pos"))
-    ranked = parts[0]
-    for p in parts[1:]:
-        ranked = ranked.unionByName(p)
+    ranked = reduce(DataFrame.unionByName, parts)
     rel = (F.pmod(F.xxhash64(F.col("doc_id") * F.lit(31) + F.col("qid")),
                   F.lit(int(rel_levels))) >= F.lit(int(rel_min))) \
         .cast("long")
@@ -3718,9 +3712,7 @@ def perm_test(df: DataFrame, n_perm: int = 20, label_col: str = "lang",
             F.when(F.col(f"s{i}") * F.col("obs_n")
                    >= F.col("obs_s") * F.col(f"n{i}"), 1)
             .otherwise(0).cast("long").alias("ge")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = reduce(DataFrame.unionByName, parts)
     return out
 
 
@@ -3760,9 +3752,7 @@ def curation_funnel(df: DataFrame, lang_val: str = "en",
         parts.append(frame.agg(F.count("*").cast("long").alias("n_docs"))
                      .select(F.lit(i).cast("long").alias("stage"),
                              F.lit(name).alias("stage_name"), "n_docs"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = reduce(DataFrame.unionByName, parts)
     return out
 
 

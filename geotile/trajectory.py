@@ -20,6 +20,8 @@ DuckDB oracle gate.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -442,10 +444,8 @@ def radius_of_gyration(df: DataFrame, key: str = "user_id",
     (both sides hash on the key — co-partitioned under AQE), one keyed
     final aggregate; haversine is the native column expression, zero
     Python."""
-    from . import udfs
-
-    mlat = F.floor(F.col(lat) * F.lit(1000.0) + F.lit(0.5)).cast("long")
-    mlon = F.floor(F.col(lon) * F.lit(1000.0) + F.lit(0.5)).cast("long")
+    mlat = udfs.milli(F.col(lat))
+    mlon = udfs.milli(F.col(lon))
     cent = (df.groupBy(key)
             .agg(F.count("*").alias("n_fixes"),
                  F.sum(mlat).alias("_slat"),
@@ -1326,14 +1326,7 @@ def hourly_acf(df: DataFrame, lat: str = "lat", lon: str = "lon",
     zero-fill grid is cells x hours (bounded by the grid and the time
     span, never by rows) built from a broadcast 1-row global span; the
     lag products are one window per cell over that bounded grid."""
-    ny = int(180.0 / cell_deg)
-    nx = int(360.0 / cell_deg)
-    ybin = F.least(F.greatest(F.floor((F.col(lat) + F.lit(90.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(ny - 1))
-    xbin = F.least(F.greatest(F.floor((F.col(lon) + F.lit(180.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(nx - 1))
+    ybin, xbin, _, _ = udfs.deg_bins(F.col(lat), F.col(lon), cell_deg)
     hour = F.floor(F.col(ts) / F.lit(3600)).cast("long")
     counts = (df.select((ybin * 100000 + xbin).alias("cell_id"),
                         hour.alias("h"))
@@ -1454,15 +1447,13 @@ def commute_anchors(df: DataFrame, cell_deg: float = 10.0,
     Scale shape: one (user, cell, daypart) partial aggregation, two
     per-user top-1 windows over the collapsed frame, and day-level
     joins on already-distinct (user, date) frames — nothing data-sized
-    after the first shuffle."""
-    ny = int(180.0 / cell_deg)
-    nx = int(360.0 / cell_deg)
-    ybin = F.least(F.greatest(F.floor((F.col(lat) + F.lit(90.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(ny - 1))
-    xbin = F.least(F.greatest(F.floor((F.col(lon) + F.lit(180.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(nx - 1))
+    after the first shuffle.  Cells pack as ``row * 1000 + column``, so
+    ``cell_deg`` must give at most 1,000 columns (``cell_deg >= 0.36``);
+    a finer grid raises ``ValueError`` rather than merge cells."""
+    ybin, xbin, _, nx = udfs.deg_bins(F.col(lat), F.col(lon), cell_deg)
+    if nx > 1000:
+        raise ValueError(f"commute_anchors: cell_deg={cell_deg} gives {nx} columns; "
+                         "cell ids pack row * 1000 + column, so at most 1000 fit")
     hod = (F.floor(F.col(ts) / F.lit(3600.0)).cast("long") % 24)
     base = df.select(F.col(key).alias("u"),
                      (ybin * 1000 + xbin).alias("cell"),
@@ -1588,14 +1579,7 @@ def haar_energy(df: DataFrame, lat: str = "lat", lon: str = "lon",
 
     Returns per cell: ``(cell_id, n_obs, e1..e{levels})`` — all exact
     BIGINTs."""
-    ny = int(180.0 / cell_deg)
-    nx = int(360.0 / cell_deg)
-    ybin = F.least(F.greatest(F.floor((F.col(lat) + F.lit(90.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(ny - 1))
-    xbin = F.least(F.greatest(F.floor((F.col(lon) + F.lit(180.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(nx - 1))
+    ybin, xbin, _, _ = udfs.deg_bins(F.col(lat), F.col(lon), cell_deg)
     hour = F.floor(F.col(ts) / F.lit(3600.0)).cast("long")
     raw = df.select((ybin * 100000 + xbin).alias("cell_id"),
                     hour.alias("h"))
@@ -1711,10 +1695,10 @@ def step_direction_stats(df: DataFrame, key: str = "user_id",
     — the resultant length/angle are one formula away."""
     d = _lagged(df, key, ts, order_col, lat, lon).where(
         F.col("_plat").isNotNull())
-    px = F.floor(F.col(lon) * F.lit(1000.0) + F.lit(0.5)).cast("long")
-    py = F.floor(F.col(lat) * F.lit(1000.0) + F.lit(0.5)).cast("long")
-    qx = F.floor(F.col("_plon") * F.lit(1000.0) + F.lit(0.5)).cast("long")
-    qy = F.floor(F.col("_plat") * F.lit(1000.0) + F.lit(0.5)).cast("long")
+    px = udfs.milli(F.col(lon))
+    py = udfs.milli(F.col(lat))
+    qx = udfs.milli(F.col("_plon"))
+    qy = udfs.milli(F.col("_plat"))
     dx, dy = px - qx, py - qy
     d2 = (dx * dx + dy * dy).cast("double")
     steps = d.select(F.col(key), dx.alias("dx"), dy.alias("dy"),
@@ -2096,8 +2080,8 @@ def distance_decay(df: DataFrame, ring_milli: int = 2000,
     cell = F.substring(F.col(cell_col), 1, nchars)
     w = Window.partitionBy(key).orderBy(
         F.col(ts).asc(), F.col(order_col).asc())
-    px = F.floor(F.col(lon) * F.lit(1000.0) + F.lit(0.5)).cast("long")
-    py = F.floor(F.col(lat) * F.lit(1000.0) + F.lit(0.5)).cast("long")
+    px = udfs.milli(F.col(lon))
+    py = udfs.milli(F.col(lat))
     d = (df.withColumn("_d", cell)
          .withColumn("_px", px).withColumn("_py", py)
          .withColumn("_o", F.lag("_d").over(w))
@@ -2140,14 +2124,7 @@ def cell_sync_pairs(df: DataFrame, lat: str = "lat", lon: str = "lon",
     rollup and a TakeOrdered."""
     from . import cache
 
-    ny = int(180.0 / cell_deg)
-    nx = int(360.0 / cell_deg)
-    ybin = F.least(F.greatest(F.floor((F.col(lat) + F.lit(90.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(ny - 1))
-    xbin = F.least(F.greatest(F.floor((F.col(lon) + F.lit(180.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(nx - 1))
+    ybin, xbin, _, _ = udfs.deg_bins(F.col(lat), F.col(lon), cell_deg)
     hour = F.floor(F.col(ts) / F.lit(3600)).cast("long")
     counts = (df.select((ybin * 100000 + xbin).alias("cell_id"),
                         hour.alias("h"))
@@ -2210,14 +2187,7 @@ def peak_hours(df: DataFrame, lat: str = "lat", lon: str = "lon",
     rows per cell), one struct-argmax per cell, one rollup.
     Returns ``(cell_id, total, peak_hour, peak_n, share_micro,
     n_day, n_night)``."""
-    ny = int(180.0 / cell_deg)
-    nx = int(360.0 / cell_deg)
-    ybin = F.least(F.greatest(F.floor((F.col(lat) + F.lit(90.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(ny - 1))
-    xbin = F.least(F.greatest(F.floor((F.col(lon) + F.lit(180.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(nx - 1))
+    ybin, xbin, _, _ = udfs.deg_bins(F.col(lat), F.col(lon), cell_deg)
     how = F.pmod(F.expr(f"{ts} div 3600"), F.lit(24))
     counts = (df.select((ybin * 100000 + xbin).alias("cell_id"),
                         how.alias("hh"))
@@ -2413,14 +2383,7 @@ def ewma_alerts(df: DataFrame, lat: str = "lat", lon: str = "lon",
     import numpy as np
     import pandas as pd
 
-    ny = int(180.0 / cell_deg)
-    nx = int(360.0 / cell_deg)
-    ybin = F.least(F.greatest(F.floor((F.col(lat) + F.lit(90.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(ny - 1))
-    xbin = F.least(F.greatest(F.floor((F.col(lon) + F.lit(180.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(nx - 1))
+    ybin, xbin, _, _ = udfs.deg_bins(F.col(lat), F.col(lon), cell_deg)
     hcol = F.expr(f"{ts} DIV 3600")
     base = df.select((ybin * 100000 + xbin).alias("cell_id"),
                      hcol.alias("hh"))
@@ -2555,14 +2518,7 @@ def cell_hour_mi(df: DataFrame, lat: str = "lat", lon: str = "lon",
     cells x 24), marginals as two rollups of it, one bounded join.
     Returns one row ``(n_total, n_cells, n_hours, mi_sum_nano)``
     where ``mi_sum_nano / n_total / 1e9`` is the MI in nats."""
-    ny = int(180.0 / cell_deg)
-    nx = int(360.0 / cell_deg)
-    ybin = F.least(F.greatest(F.floor((F.col(lat) + F.lit(90.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(ny - 1))
-    xbin = F.least(F.greatest(F.floor((F.col(lon) + F.lit(180.0))
-                                      / F.lit(cell_deg)).cast("long"),
-                              F.lit(0)), F.lit(nx - 1))
+    ybin, xbin, _, _ = udfs.deg_bins(F.col(lat), F.col(lon), cell_deg)
     how = F.pmod(F.expr(f"{ts} DIV 3600"), F.lit(24))
     ct = (df.select((ybin * 100000 + xbin).alias("cell_id"),
                     how.alias("hh"))
@@ -2739,9 +2695,7 @@ def unicity_audit(df: DataFrame, max_p: int = 3, nchars: int = 4,
                     F.max("g").cast("long").alias("max_group"))
             .select(F.lit(p).cast("long").alias("p"), "n_keys",
                     "n_unique", "n_sigs", "max_group"))
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
+    out = reduce(DataFrame.unionByName, parts)
     return out
 
 

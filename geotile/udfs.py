@@ -305,6 +305,36 @@ def lattice_ij(lat, lon, lat_bits: int, lon_bits: int):
     return idx(lat, 90.0, 180.0, 1 << lat_bits), idx(lon, 180.0, 360.0, 1 << lon_bits)
 
 
+def deg_bins(lat, lon, cell_deg: float):
+    """(lat, lon) columns -> ``(y, x, ny, nx)``: the clamped row and
+    column ``least(greatest(floor((x + off) / cell_deg), 0), n - 1)`` of
+    a ``cell_deg``-degree grid with ``ny = ceil(180 / cell_deg)`` rows
+    and ``nx = ceil(360 / cell_deg)`` columns.  It divides by
+    ``cell_deg`` (the form every oracle mirrors) instead of multiplying
+    by ``n/span`` as :func:`lattice_ij` does, so bin edges can differ
+    from the lattice rule in the last ulp.  When ``cell_deg`` does not
+    divide 180 and 360 the last row and column are partial (at 7
+    degrees lat 90 lands in row 25 of 26)."""
+    from pyspark.sql import functions as F
+
+    ny, nx = math.ceil(180.0 / cell_deg), math.ceil(360.0 / cell_deg)
+
+    def idx(x, off, n):
+        return F.least(F.greatest(F.floor((x + F.lit(off)) / F.lit(cell_deg)).cast("long"),
+                                  F.lit(0)), F.lit(n - 1))
+
+    return idx(lat, 90.0, ny), idx(lon, 180.0, nx), ny, nx
+
+
+def milli(x):
+    """A degree column snapped to integer milli-degrees,
+    ``floor(x * 1000 + 0.5)`` as a long: the cross-engine tie rule of
+    every planar milli-degree operator."""
+    from pyspark.sql import functions as F
+
+    return F.floor(x * F.lit(1000.0) + F.lit(0.5)).cast("long")
+
+
 def morton_col(ix, iy):
     """Morton / Z-order interleave of two grid coordinates of up to 32
     bits each as ONE native column expression (the 5-step shift-or bit

@@ -10,9 +10,10 @@ no ``BroadcastNestedLoopJoin`` whose build side has no row bound except
 the ones named in ``UNBOUNDED_BNLJ``.  A plan that breaks the rule fails
 the query.  A full run (no ``--only``) writes PLANS.md, one row per query.
 
-Usage: python scripts/check_oracle.py [--sf /root/testdata/sf0.01] [--only q7]
+Usage: python scripts/check_oracle.py [--sf SF_DIR] [--only q7,q102]
 
-``--only`` keeps the queries whose name contains the substring.  Spark
+``--only`` keeps the queries whose name contains any of its
+comma-separated substrings, all in one Spark session.  Spark
 runs on ``get_spark``'s default cores.  The tally reads ``passed/ran``:
 queries filtered out by ``--only`` are reported as skipped, never as
 passes.
@@ -202,13 +203,14 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
+    only = args.only.split(",") if args.only else None
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     plans = {}
     ran = unchecked = 0
     for name, fn in qs.items():
-        if args.only and args.only not in name:
+        if only and not any(o in name for o in only):
             continue
         ran += 1
         t0 = time.time()

@@ -698,7 +698,10 @@ def test_salted_topn_identical_results(spark):
     assert sorted(map(tuple, base.collect())) == sorted(map(tuple, salted.collect()))
 
 
-def test_cell_density_smooth_matches_brute_force(spark):
+@pytest.mark.parametrize("lat_bits,lon_bits", [(6, 7), (1, 1)])
+def test_cell_density_smooth_matches_brute_force(spark, lat_bits, lon_bits):
+    """On the 2x2 lattice a cell's east and west neighbours are the
+    same cell, which then counts twice in the ring."""
     import itertools
 
     from geotile import cache, engine
@@ -708,9 +711,10 @@ def test_cell_density_smooth_matches_brute_force(spark):
     pts = [(89.9, 179.9), (89.9, -179.9), (-89.9, 0.0),
            (0.1, 0.1), (0.2, 0.2), (0.3, 0.3), (10.0, 10.0)]
     df = spark.createDataFrame(pts, "lat double, lon double")
-    out = engine.cell_density_smooth(df, lat_bits=6, lon_bits=7)
+    out = engine.cell_density_smooth(df, lat_bits=lat_bits, lon_bits=lon_bits)
     got = {(r["i"], r["j"]): (r["n"], r["n_ring"]) for r in out.collect()}
     cache.release(out)
+    ni, nj = 1 << lat_bits, 1 << lon_bits
 
     def idx(v, lo, span, bits):
         import math
@@ -718,7 +722,7 @@ def test_cell_density_smooth_matches_brute_force(spark):
 
     counts = {}
     for la, lo in pts:
-        key = (idx(la, -90.0, 180.0, 6), idx(lo, -180.0, 360.0, 7))
+        key = (idx(la, -90.0, 180.0, lat_bits), idx(lo, -180.0, 360.0, lon_bits))
         counts[key] = counts.get(key, 0) + 1
     want = {}
     for (i, j), n in counts.items():
@@ -726,14 +730,18 @@ def test_cell_density_smooth_matches_brute_force(spark):
         for di, dj in itertools.product((-1, 0, 1), repeat=2):
             if (di, dj) == (0, 0):
                 continue
-            ti, tj = i + di, (j + dj) % 128
-            if 0 <= ti < 64:
+            ti, tj = i + di, (j + dj) % nj
+            if 0 <= ti < ni:
                 ring += counts.get((ti, tj), 0)
         want[(i, j)] = (n, ring)
     assert got == want
     # the two antimeridian points must see each other through the wrap
-    ks = sorted(k for k in got if k[0] == 63)
+    ks = sorted(k for k in got if k[0] == ni - 1)
     assert len(ks) == 2 and got[ks[0]][1] >= 1 and got[ks[1]][1] >= 1
+    if nj == 2:
+        # (1, 0) sees (1, 1) as both its east and its west neighbour
+        assert got[(1, 0)][1] == 2 * got[(1, 1)][0] + 2 * counts.get((0, 1), 0) \
+            + counts.get((0, 0), 0)
 
 
 def test_morans_i_matches_brute_force(spark):

@@ -960,6 +960,58 @@ def test_commute_anchors_hand_case(spark):
     assert 2 not in out
 
 
+def test_commute_anchors_rejects_colliding_cell_ids(spark):
+    """At 0.25 degrees the grid has 1,440 columns, so ``row * 1000 +
+    column`` would give (lat -89.9, lon 100.0) -> row 0, column 1,120
+    and (lat -89.7, lon -150.0) -> row 1, column 120 the same id 1120."""
+    import pytest
+
+    df = spark.createDataFrame([(1, 3600, -89.9, 100.0), (1, 36000, -89.7, -150.0)],
+                               "user_id long, ep long, lat double, lon double")
+    with pytest.raises(ValueError, match="1440 columns"):
+        trajectory.commute_anchors(df, cell_deg=0.25)
+
+
+def test_deg_bins_matches_int_clamp(spark):
+    """``udfs.deg_bins`` equals the old ``int(180/cell_deg)`` clamp
+    wherever ``cell_deg`` divides 180 and 360, on random points, bin
+    edges and the +-90/+-180 corners; at 7 degrees the partial last
+    row takes lat 90."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from geotile import udfs
+
+    rng = np.random.default_rng(7)
+    degs = (0.25, 5.0, 10.0, 30.0)
+    pts = [(float(la), float(lo)) for la, lo in zip(rng.uniform(-90.0, 90.0, 500),
+                                                     rng.uniform(-180.0, 180.0, 500))]
+    # every bin edge of every grid: multiples of 0.25 on both axes
+    pts += [(-90.0 + 0.25 * (k % 721), -180.0 + 0.25 * k) for k in range(1441)]
+    pts += [(la, lo) for la in (-90.0, -0.0, 89.999, 90.0) for lo in (-180.0, -0.0, 179.999, 180.0)]
+    df = spark.createDataFrame(pts, "lat double, lon double")
+    cols = []
+    for k, d in enumerate(degs + (7.0,)):
+        y, x, ny, nx = udfs.deg_bins(F.col("lat"), F.col("lon"), d)
+        cols += [y.alias(f"y{k}"), x.alias(f"x{k}")]
+    rows = df.select("lat", "lon", *cols).collect()
+    assert len(rows) == len(pts)
+
+    def old(v, off, span, d):
+        n = int(span / d)
+        return min(max(math.floor((v + off) / d), 0), n - 1)
+
+    for k, d in enumerate(degs):
+        assert udfs.deg_bins(F.col("lat"), F.col("lon"), d)[2:] == (int(180 / d), int(360 / d))
+        for r in rows:
+            assert (r[f"y{k}"], r[f"x{k}"]) == (old(r["lat"], 90.0, 180.0, d),
+                                               old(r["lon"], 180.0, 360.0, d)), (d, r)
+    assert udfs.deg_bins(F.col("lat"), F.col("lon"), 7.0)[2:] == (26, 52)
+    corner = [r for r in rows if (r["lat"], r["lon"]) == (90.0, 180.0)][0]
+    assert (corner["y4"], corner["x4"]) == (25, 51)
+
+
 def test_haar_energy_hand_series(spark):
     """Exact Haar detail energies on a hand-built series, and the
     sparse-equals-dense property (absent hours contribute zero)."""

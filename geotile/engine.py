@@ -226,14 +226,18 @@ def _fit_cover_radius(qlat: float, qlon: float, radius_m: float,
 PREFIX_COL = "gh2"  # stored tables partition by the 2-char cell prefix
 
 
+def _prefixes(df: DataFrame, cells: Sequence[str]) -> list[str] | None:
+    """A cover's cell prefixes, if ``df`` has the prefix column and no cell is shorter."""
+    if PREFIX_COL not in df.columns or not cells or min(len(c) for c in cells) < 2:
+        return None
+    return sorted({c[:2] for c in cells})
+
+
 def _prefix_pruning(df: DataFrame, cells: Sequence[str]) -> Column | None:
     """Partition-pruning predicate on the table's cell-prefix partition
     column (PartitionFilters at the scan), when applicable."""
-    if PREFIX_COL not in df.columns or not cells:
-        return None
-    if min(len(c) for c in cells) < 2:
-        return None  # cover coarser than the partition prefix
-    return F.col(PREFIX_COL).isin(sorted({c[:2] for c in cells}))
+    prefixes = _prefixes(df, cells)
+    return None if prefixes is None else F.col(PREFIX_COL).isin(prefixes)
 
 
 def radius_search(positions: DataFrame, qlat: float, qlon: float, radius_m: float,
@@ -243,18 +247,25 @@ def radius_search(positions: DataFrame, qlat: float, qlon: float, radius_m: floa
     partition/row-group pruning at the scan) + haversine refine.  One
     narrow scan of the pruned cell partitions, zero shuffles.  Large
     radii automatically coarsen the cover precision (prefix IN on the
-    cell column) so the literal list stays small."""
+    cell column) so the literal list stays small.  Built as SQL text: the
+    Column API's plan (haversine_col, isin) for a few py4j calls, not ~40."""
     n, cells = _fit_cover_radius(qlat, qlon, radius_m, nchars)
-    pred = (F.col(cell_col).isin(cells) if n == nchars
-            else F.substring(F.col(cell_col), 1, n).isin(cells))
-    pp = _prefix_pruning(positions, cells)
-    if pp is not None:
-        pred = pp & pred
-    # native-expression refine: stays inside whole-stage codegen
-    dist = udfs.haversine_col(F.lit(qlat), F.lit(qlon), F.col(lat), F.col(lon))
-    return (positions.where(pred)
-            .withColumn("dist_m", dist)
-            .where(F.col("dist_m") <= radius_m))
+
+    def _in(col: str, values: Sequence[str]) -> str:
+        return f"{col} IN ({', '.join(repr(str(v)) for v in values)})"
+
+    pred = _in(f"`{cell_col}`" if n == nchars else f"substring(`{cell_col}`, 1, {n})", cells)
+    prefixes = _prefixes(positions, cells)
+    if prefixes is not None:
+        pred = f"{_in(f'`{PREFIX_COL}`', prefixes)} AND {pred}"
+    la1, lo1, la2, lo2 = (f"radians({c})" for c in (
+        f"{float(qlat)!r}D", f"{float(qlon)!r}D", f"`{lat}`", f"`{lon}`"))
+    # udfs.haversine_col, term for term
+    a = (f"power(sin(({la2} - {la1}) / 2), 2) + cos({la1}) * cos({la2}) "
+         f"* power(sin(({lo2} - {lo1}) / 2), 2)")
+    dist = f"{2.0 * gh.EARTH_RADIUS_M!r}D * asin(sqrt(greatest(0.0D, least(1.0D, {a}))))"
+    return (positions.withColumn("dist_m", F.expr(dist))
+            .where(f"{pred} AND dist_m <= {float(radius_m)!r}D"))
 
 
 def _radius_cover_join(positions: DataFrame, queries, nchars: int = DEFAULT_NCHARS,

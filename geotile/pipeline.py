@@ -117,40 +117,13 @@ def stage_points(spark: SparkSession, workdir: str, nchars: int = NCHARS) -> str
         if pages.rdd.getNumPartitions() < target:
             pages = pages.repartition(target)
         points = pages.mapInPandas(_points_batches(nchars), schema=POINTS_SCHEMA)
-        # Two write layouts, both ending in a gh2-partitioned table:
-        #
-        # * "sorted" (default): sortWithinPartitions(gh2, geohash) then
-        #   write — a NARROW per-task sort, no shuffle, no second pass
-        #   over the UDF output.  File count = tasks x dirs-touched;
-        #   rows inside each file are cell-clustered so row-group
-        #   min/max stats prune later scans.  Small files are the
-        #   table-format compactor's job at cluster scale (and the scan
-        #   packs them into splits here).
-        #
-        # * "range": repartitionByRange(gh2, geohash) first — each task
-        #   then holds a contiguous cell range, so file count ~ tasks
-        #   and files are size-balanced even under hot-city skew.  The
-        #   right choice for a 1000-executor run writing one file per
-        #   task; costs a full extra pass (the range partitioner SAMPLES
-        #   its child, so the UDF output must be persisted to avoid
-        #   re-executing the extract stage) plus a shuffle of the table.
-        cluster = os.environ.get("SPARK_GRAFT_CLUSTER_WRITE", "sorted")
-        if cluster == "range":
-            from pyspark import StorageLevel
-
-            points = points.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                clustered = points.repartitionByRange(
-                    target, F.col("gh2"), F.col("geohash"))
-                table.write_stage(clustered, path, partition_by=["gh2"],
-                                  parents=[pages_path], params=params)
-            finally:
-                points.unpersist()
-        else:
-            clustered = points.sortWithinPartitions(F.col("gh2"), F.col("geohash"))
-            table.write_stage(clustered, path, partition_by=["gh2"],
-                              parents=[pages_path], params=params,
-                              sort_by=["gh2", "geohash"])
+        # write_stage sorts each task's rows by (gh2, geohash): a narrow
+        # sort, no shuffle, no second pass over the UDF output.  File
+        # count = tasks x dirs touched; small files are the table-format
+        # compactor's job (table.compact) at cluster scale.
+        table.write_stage(points, path, partition_by=["gh2"],
+                          parents=[pages_path], params=params,
+                          sort_by=["gh2", "geohash"])
     return path
 
 

@@ -60,11 +60,9 @@ class GeoService:
         update = engine.with_cell_ref(self.spark.createDataFrame(
             [(msisdn, float(latitude), float(longitude), int(time), self._seq)],
             _STATE_SCHEMA))
-        # LWW on msisdn; ties (same ts) resolved toward the new row via seq
-        self.state = engine.upsert_positions(self.state, update,
-                                             key="msisdn", ts="ts")
-        # re-pin the tie-break: on equal ts the larger seq (newer) wins
-        self.state = self.state.cache()
+        # LWW on msisdn; ties (same ts) resolved toward the update
+        self._commit(engine.upsert_positions(self.state, update,
+                                             key="msisdn", ts="ts"))
         self._keys.add(msisdn)
         return '{"success":"0"}'
 
@@ -86,9 +84,17 @@ class GeoService:
         if msisdn not in self._keys:
             return '{"error":"2"}'  # DelPos false on missing key
         keys = self.spark.createDataFrame([(msisdn,)], "msisdn string")
-        self.state = engine.delete_positions(self.state, keys).cache()
+        self._commit(engine.delete_positions(self.state, keys))
         self._keys.discard(msisdn)
         return '{"success":"0"}'
+
+    def _commit(self, state: DataFrame) -> None:
+        """Swap in ``state``, materialized with its lineage cut, and free the
+        snapshot it replaces: one persisted snapshot, however many mutations."""
+        old, self.state = self.state, state.localCheckpoint(eager=True)
+        plan = old._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":  # a checkpoint
+            plan.rdd().unpersist(False)
 
     # -- /GeoHash/Pool/ ------------------------------------------------
     def pool(self) -> str:

@@ -42,11 +42,13 @@ def _state_version_path(state_dir: str, version: int) -> str:
 
 
 def latest_state_version(state_dir: str) -> int | None:
+    """The newest version with a committed manifest, tried newest-first."""
     if not os.path.isdir(state_dir):
         return None
-    versions = [int(d[1:]) for d in os.listdir(state_dir)
-                if d.startswith("v") and table.read_manifest(os.path.join(state_dir, d))]
-    return max(versions) if versions else None
+    versions = sorted((int(d[1:]) for d in os.listdir(state_dir)
+                       if d[:1] == "v" and d[1:].isdigit()), reverse=True)
+    return next((v for v in versions if os.path.isfile(
+        os.path.join(_state_version_path(state_dir, v), table.MANIFEST))), None)
 
 
 def read_state(spark: SparkSession, state_dir: str,
@@ -80,7 +82,10 @@ def upsert_stream(spark: SparkSession, updates_dir: str, state_dir: str,
         else:
             merged = engine.upsert_positions(state, batch_df, key="msisdn", ts="ts")
         out = _state_version_path(state_dir, int(batch_id))
-        table.write_stage(merged, out, params={"batch_id": int(batch_id)})
+        # geohash-sorted row groups: radius_search's cell filter reads
+        # only the row groups its cover can match
+        table.write_stage(merged, out, params={"batch_id": int(batch_id)},
+                          sort_by=["geohash"])
 
     writer = (updates.writeStream.foreachBatch(_merge)
               .option("checkpointLocation", checkpoint_dir))

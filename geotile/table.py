@@ -33,6 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "_manifest.json"
+# row-group size of a sorted stage: small enough that a few-cell filter
+# skips most of a snapshot, large enough to keep the write cheap
+CLUSTER_ROW_GROUP_BYTES = 128 << 10
 
 
 def _footer_counts(path: str, partition_by: list[str]) -> dict[str, int]:
@@ -77,15 +80,12 @@ def write_stage(df: DataFrame, path: str, partition_by: Sequence[str] = (),
     fingerprint, lineage hash (parent manifests + params), and row
     counts per partition value — the resume/conservation contract.
 
-    ``sort_by`` is DECLARATIVE metadata: the caller pre-sorted the data
-    by these columns (sortWithinPartitions), and :func:`compact` must
-    re-apply the same clustering so row-group min/max pruning survives
-    compaction."""
+    ``sort_by``: each task sorts its rows by these columns and writes
+    row groups of ``CLUSTER_ROW_GROUP_BYTES`` (:func:`_clustered_writer`),
+    so a filter on the sort key skips row groups by their min/max.  The
+    manifest records it and :func:`compact` re-applies it."""
     params = params or {}
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    _clustered_writer(df, partition_by, sort_by).parquet(path)
     return commit_manifest(path, {
         "schema_json": df.schema.json(),
         "schema_fingerprint": _schema_fingerprint(df),
@@ -95,6 +95,17 @@ def write_stage(df: DataFrame, path: str, partition_by: Sequence[str] = (),
         "partitions": _footer_counts(path, list(partition_by)),
         "params": params,
     })
+
+
+def _clustered_writer(df: DataFrame, partition_by: Sequence[str],
+                      sort_by: Sequence[str]):
+    """The overwrite writer of a stage: partitioned by ``partition_by``;
+    with ``sort_by``, sorted within each task (no shuffle) and cut into
+    ``CLUSTER_ROW_GROUP_BYTES`` row groups."""
+    w = (df.sortWithinPartitions(*sort_by).write
+         .option("parquet.block.size", CLUSTER_ROW_GROUP_BYTES) if sort_by else df.write)
+    w = w.mode("overwrite")
+    return w.partitionBy(*partition_by) if partition_by else w
 
 
 def commit_manifest(path: str, manifest: dict) -> dict:
@@ -351,18 +362,11 @@ def compact(spark: SparkSession, path: str, target_mb: int = 128) -> dict:
     n_files = max(1, int(total_bytes // (target_mb << 20)) + 1)
     df = read_stage(spark, path)
     tmp = path.rstrip("/") + ".compact.tmp"
-    writer = df.repartition(n_files, *[F.col(c) for c in m["partition_by"]]) \
+    df = df.repartition(n_files, *[F.col(c) for c in m["partition_by"]]) \
         if m["partition_by"] else df.coalesce(n_files)
-    # re-apply the stage's declared clustering: repartition alone would
-    # destroy the per-file sort the write path created, losing parquet
-    # row-group min/max pruning after every compaction
-    sort_by = m.get("sort_by") or []
-    if sort_by:
-        writer = writer.sortWithinPartitions(*[F.col(c) for c in sort_by])
-    w = writer.write.mode("overwrite")
-    if m["partition_by"]:
-        w = w.partitionBy(*m["partition_by"])
-    w.parquet(tmp)
+    # re-apply the stage's clustering: repartition alone would destroy
+    # the per-file sort and row groups that min/max pruning relies on
+    _clustered_writer(df, m["partition_by"], m.get("sort_by") or []).parquet(tmp)
     new_counts = _footer_counts(tmp, m["partition_by"])
     if {k: int(v) for k, v in new_counts.items()} != \
             {k: int(v) for k, v in m["partitions"].items()}:

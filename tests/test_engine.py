@@ -103,6 +103,59 @@ def test_radius_search_production_matches_brute_force(spark):
     assert got == expect
 
 
+def _radius_search_columns(positions, qlat, qlon, r):
+    """radius_search built through the Column API."""
+    from geotile import udfs
+
+    n, cells = engine._fit_cover_radius(qlat, qlon, r, engine.DEFAULT_NCHARS)
+    pred = (F.col("geohash").isin(cells) if n == engine.DEFAULT_NCHARS
+            else F.substring(F.col("geohash"), 1, n).isin(cells))
+    pp = engine._prefix_pruning(positions, cells)
+    if pp is not None:
+        pred = pp & pred
+    dist = udfs.haversine_col(F.lit(qlat), F.lit(qlon), F.col("lat"), F.col("lon"))
+    return (positions.where(pred).withColumn("dist_m", dist)
+            .where(F.col("dist_m") <= r))
+
+
+@pytest.mark.parametrize("qlat,qlon,r,partitioned", [
+    (39.9286, 116.3895, 30000.0, False),
+    (-33.856784, -70.648270, 5000.0, False),   # southern and western
+    (1e-05, -1e-05, 20000.0, False),           # reprs with an exponent
+    (39.9286, 116.3895, 3_000_000.0, False),   # coarsened cover
+    (39.9286, 116.3895, 30000.0, True),        # gh2 prefix pruning
+])
+def test_radius_search_plan_equals_column_api(spark, tmp_path, qlat, qlon, r,
+                                              partitioned):
+    """The SQL-text filter and dist_m optimize to the Column API's plan
+    (expression ids aside) and return the same rows, bit for bit."""
+    import re
+
+    rng = np.random.default_rng(5)
+    lat = np.concatenate([rng.uniform(39.0, 41.0, 300), rng.uniform(-34.5, -33.0, 300),
+                          rng.uniform(-0.2, 0.2, 300)])
+    lon = np.concatenate([rng.uniform(115.0, 118.0, 300), rng.uniform(-71.5, -70.0, 300),
+                          rng.uniform(-0.2, 0.2, 300)])
+    rows = [(f"m{i}", float(a), float(b), i) for i, (a, b) in enumerate(zip(lat, lon))]
+    df = engine.with_cell(spark.createDataFrame(rows, POS_SCHEMA))
+    if partitioned:
+        path = str(tmp_path / "parted")
+        (df.withColumn("gh2", F.substring("geohash", 1, 2))
+         .write.partitionBy("gh2").parquet(path))
+        df = spark.read.parquet(path)
+
+    def plan(x):
+        return re.sub(r"#\d+L?", "", x._jdf.queryExecution().optimizedPlan().toString())
+
+    got = engine.radius_search(df, qlat, qlon, r)
+    want = _radius_search_columns(df, qlat, qlon, r)
+    assert plan(got) == plan(want)
+    if partitioned:  # the cover lies inside prefix wx
+        assert "(gh2 = wx)" in plan(got)
+    got_rows = sorted((x["msisdn"], x["dist_m"]) for x in got.collect())
+    assert got_rows and got_rows == sorted((x["msisdn"], x["dist_m"]) for x in want.collect())
+
+
 def test_radius_join_matches_brute_force(spark):
     df, lat, lon = _random_positions(spark)
     queries = [(0, 39.9286, 116.3895, 25000.0), (1, 40.5, 117.0, 10000.0),

@@ -191,7 +191,7 @@ def test_join_rows_identical_across_parallelism(spark, tmp_path):
     assert a == b
 
 
-def test_compact_preserves_content_and_lineage(spark, tmp_path):
+def test_compact_preserves_content_and_lineage(spark, tmp_path, monkeypatch):
     from pyspark.sql import functions as F
 
     wd = str(tmp_path / "wd")
@@ -201,6 +201,9 @@ def test_compact_preserves_content_and_lineage(spark, tmp_path):
               .select("url", "geohash").collect()}
     n_files_before = sum(1 for root, _d, fs in os.walk(ppath)
                          for f in fs if f.endswith(".parquet"))
+    # row groups far smaller than the stage's files, so the check below
+    # sees whether compact writes them
+    monkeypatch.setattr(table, "CLUSTER_ROW_GROUP_BYTES", 2 << 10)
     m = table.compact(spark, ppath, target_mb=128)
     n_files_after = sum(1 for root, _d, fs in os.walk(ppath)
                         for f in fs if f.endswith(".parquet"))
@@ -221,6 +224,16 @@ def test_compact_preserves_content_and_lineage(spark, tmp_path):
     col = pq.read_table(pfiles[0], columns=["geohash"]).to_pandas()["geohash"]
     assert list(col) == sorted(col)
     assert not os.path.exists(ppath + ".compact.bak")
+    # the stage's row-group size survives too: geohash-ordered row groups
+    groups = 0
+    for f in pfiles:
+        pf = pq.ParquetFile(f)
+        gi = pf.schema_arrow.get_field_index("geohash")
+        stats = [pf.metadata.row_group(i).column(gi).statistics
+                 for i in range(pf.metadata.num_row_groups)]
+        assert all(a.max <= b.min for a, b in zip(stats, stats[1:]))
+        groups = max(groups, len(stats))
+    assert groups >= 2
 
 
 def test_bucketed_upsert_has_no_exchange(spark):

@@ -59,3 +59,19 @@ def test_upsert_migration_via_service(svc):
     assert '"Msisdn":"13661201025"' in beijing
     shanghai = svc.search(31.230416, 121.473701, 10000.0)
     assert '"Msisdn":"13661201024"' in shanghai
+
+
+def test_mutations_keep_one_persisted_snapshot(spark):
+    """Each add/delete replaces the snapshot instead of caching on top
+    of it: twelve adds leave at most one more persisted RDD."""
+    jsc = spark.sparkContext._jsc
+    s = GeoService(spark)
+    before = jsc.getPersistentRDDs().size()
+    for i in range(12):
+        assert s.add(f"1390000{i:04d}", 39.928167 + i * 1e-4, 116.389550,
+                     1486447000 + i) == '{"success":"0"}'
+    assert jsc.getPersistentRDDs().size() - before <= 1
+    assert s.search(39.928167, 116.389550, 100000.0).count('"Msisdn"') == 12
+    assert s.delete("13900000003") == '{"success":"0"}'
+    assert jsc.getPersistentRDDs().size() - before <= 1
+    assert s.search(39.928167, 116.389550, 100000.0).count('"Msisdn"') == 11

@@ -2,6 +2,7 @@
 operator, windowed cell counts."""
 
 import os
+import shutil
 import time
 
 import pytest
@@ -73,12 +74,58 @@ def test_upsert_stream_kill_and_resume(spark, tmp_path):
     assert past == {"a", "b"}
     with pytest.raises(ValueError):
         streaming.read_state(spark, state_dir, version=v1 + 17)
-    # torn-write simulation: a snapshot without a committed manifest is
-    # invisible; readers fall back to the last GOOD snapshot
-    os.remove(os.path.join(state_dir, f"v{v1:06d}", table.MANIFEST))
+    # torn-write simulation: snapshots without a committed manifest are
+    # invisible; readers fall back to the last GOOD snapshot, past the
+    # two newest, both torn
+    torn = os.path.join(state_dir, f"v{v1 + 1:06d}")
+    shutil.copytree(os.path.join(state_dir, f"v{v1:06d}"), torn)
+    for v in (v1, v1 + 1):
+        os.remove(os.path.join(state_dir, f"v{v:06d}", table.MANIFEST))
     assert streaming.latest_state_version(state_dir) == v0
     fallback = {r["msisdn"] for r in streaming.read_state(spark, state_dir).collect()}
     assert fallback == {"a", "b"}
+
+
+def test_upsert_stream_snapshot_is_geohash_clustered(spark, tmp_path):
+    """Every snapshot file is sorted by geohash and cut into row groups
+    whose min/max do not overlap, so a cell filter skips row groups; a
+    radius search over the snapshot equals a numpy brute force."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from geotile import engine
+    from geotile.kernel import geohash_np as gh
+
+    updates_dir = str(tmp_path / "updates")
+    state_dir = str(tmp_path / "state")
+    os.makedirs(updates_dir)
+    rng = np.random.default_rng(11)
+    n = 60_000
+    lat, lon = rng.uniform(30.0, 45.0, n), rng.uniform(100.0, 125.0, n)
+    pd.DataFrame({"msisdn": [f"m{i}" for i in range(n)], "lat": lat, "lon": lon,
+                  "ts": np.arange(n, dtype=np.int64)}).to_parquet(
+        os.path.join(updates_dir, "b0.parquet"), index=False)
+    q = streaming.upsert_stream(spark, updates_dir, state_dir, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    snap = os.path.join(state_dir, f"v{streaming.latest_state_version(state_dir):06d}")
+    groups = 0
+    for f in sorted(f for f in os.listdir(snap) if f.endswith(".parquet")):
+        pf = pq.ParquetFile(os.path.join(snap, f))
+        col = pf.schema_arrow.get_field_index("geohash")
+        stats = [pf.metadata.row_group(i).column(col).statistics
+                 for i in range(pf.metadata.num_row_groups)]
+        assert all(a.max <= b.min for a, b in zip(stats, stats[1:]))
+        cells = pf.read(columns=["geohash"]).column(0).to_pylist()
+        assert cells == sorted(cells)
+        groups += len(stats)
+    assert groups >= 3
+    state = streaming.read_state(spark, state_dir)
+    for qlat, qlon, r in [(39.9, 116.4, 40_000.0), (31.2, 121.5, 120_000.0),
+                          (44.99, 100.01, 25_000.0)]:
+        got = {row["msisdn"] for row in engine.radius_search(state, qlat, qlon, r).collect()}
+        d = gh.haversine_m(np.full(n, qlat), np.full(n, qlon), lat, lon)
+        assert got == {f"m{i}" for i in np.flatnonzero(d <= r)}
 
 
 def test_keyed_latest_stream_batchwise(spark, tmp_path):

@@ -7,7 +7,9 @@ is the cluster entry; the same function runs in-process for tests and
 bench.  Stage graph (each stage = one manifest-committed table):
 
   pages      synth_pages (or external ingest)        partition: none
-  points     extract + mentions explode + cells      partition: gh2 (2-char prefix)
+  points     extract + mentions explode + cells      partition: gh2 (2-char prefix),
+                                                     rebalanced on gh2: one file per
+                                                     prefix, hot prefixes split
   joined     radius join vs the city POI set         partition: none (result)
   rollup     per-cell counts (salted aggregation)    partition: none
   store      latest point per url via MERGE INTO     external table, 16 buckets on url,
@@ -15,8 +17,11 @@ bench.  Stage graph (each stage = one manifest-committed table):
 
 At 100 TB the 'points' table is the big one; it is written partitioned
 by the 2-char cell prefix so every later spatial join prunes partitions
-at the scan.  Hot prefixes (Zipf cities) are handled by AQE skew
-splitting + the salted rollup.
+at the scan.  write_stage shuffles it once by that prefix, so later
+stages scan a few files per prefix instead of one per write task and
+prefix.  Hot prefixes (Zipf cities) are handled by AQE: its rebalance
+splits them into files of the advisory size, and its skew join
+splitting + the salted rollup handle them downstream.
 """
 
 from __future__ import annotations
@@ -117,10 +122,9 @@ def stage_points(spark: SparkSession, workdir: str, nchars: int = NCHARS) -> str
         if pages.rdd.getNumPartitions() < target:
             pages = pages.repartition(target)
         points = pages.mapInPandas(_points_batches(nchars), schema=POINTS_SCHEMA)
-        # write_stage sorts each task's rows by (gh2, geohash): a narrow
-        # sort, no shuffle, no second pass over the UDF output.  File
-        # count = tasks x dirs touched; small files are the table-format
-        # compactor's job (table.compact) at cluster scale.
+        # write_stage rebalances the rows on gh2 (one shuffle after the
+        # UDF pass, which runs once) and sorts each task's rows by
+        # (gh2, geohash): about one file per prefix directory
         table.write_stage(points, path, partition_by=["gh2"],
                           parents=[pages_path], params=params,
                           sort_by=["gh2", "geohash"])

@@ -56,7 +56,8 @@ def read_state(spark: SparkSession, state_dir: str,
     """Read a committed state snapshot: the latest by default, or an
     explicit ``version`` for TIME TRAVEL across the LWW history (each
     micro-batch committed an immutable snapshot — the Iceberg-snapshot
-    read pattern)."""
+    read pattern).  The schema comes from the snapshot's manifest, so
+    the read launches no job to infer it from the footers."""
     if version is None:
         version = latest_state_version(state_dir)
         if version is None:
@@ -64,7 +65,7 @@ def read_state(spark: SparkSession, state_dir: str,
     path = _state_version_path(state_dir, version)
     if table.read_manifest(path) is None:
         raise ValueError(f"no committed snapshot v{version} under {state_dir}")
-    return spark.read.parquet(path)
+    return table.read_stage(spark, path)
 
 
 def upsert_stream(spark: SparkSession, updates_dir: str, state_dir: str,

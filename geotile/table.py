@@ -80,11 +80,19 @@ def write_stage(df: DataFrame, path: str, partition_by: Sequence[str] = (),
     fingerprint, lineage hash (parent manifests + params), and row
     counts per partition value — the resume/conservation contract.
 
+    ``partition_by``: the rows are first rebalanced on these columns
+    (Spark's adaptive ``REBALANCE`` hint), so each partition directory
+    gets one file at small sizes instead of one per write task; AQE
+    merges small partitions and splits a hot value into files of
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``.
+
     ``sort_by``: each task sorts its rows by these columns and writes
     row groups of ``CLUSTER_ROW_GROUP_BYTES`` (:func:`_clustered_writer`),
     so a filter on the sort key skips row groups by their min/max.  The
     manifest records it and :func:`compact` re-applies it."""
     params = params or {}
+    if partition_by:
+        df = df.hint("rebalance", *partition_by)
     _clustered_writer(df, partition_by, sort_by).parquet(path)
     return commit_manifest(path, {
         "schema_json": df.schema.json(),
@@ -345,9 +353,11 @@ def recover_merge(spark: SparkSession, target: str) -> bool:
 
 def compact(spark: SparkSession, path: str, target_mb: int = 128) -> dict:
     """Rewrite a stage's data files into ~``target_mb`` files (within
-    each partition dir) — the table-format compactor's job, here for
-    the sorted-no-shuffle write path that trades file count for zero
-    extra passes at write time (pipeline.stage_points).  Content,
+    each partition dir) — the table-format compactor's job.  A stage
+    written with ``partition_by`` already lands with files of about the
+    AQE advisory size (:func:`write_stage` rebalances it), so this is for
+    unpartitioned stages written by many tasks and for a different
+    ``target_mb``; its ``repartition`` is its only shuffle.  Content,
     partitioning, lineage, and per-partition counts are unchanged (the
     manifest is re-committed with the same lineage hash, so downstream
     ``is_complete`` checks still pass); only the file layout changes."""

@@ -236,6 +236,78 @@ def test_compact_preserves_content_and_lineage(spark, tmp_path, monkeypatch):
     assert groups >= 2
 
 
+def _parquet_files(path):
+    """{partition dir relative to ``path``: sorted parquet file paths}."""
+    out = {}
+    for root, _d, fs in os.walk(path):
+        files = sorted(os.path.join(root, f) for f in fs if f.endswith(".parquet"))
+        if files:
+            out[os.path.relpath(root, path)] = files
+    return out
+
+
+@pytest.fixture(scope="module")
+def points_run(spark, tmp_path_factory):
+    wd = str(tmp_path_factory.mktemp("points_run"))
+    pipeline.run_pipeline(spark, wd, n=3000)
+    return wd
+
+
+def test_points_one_file_per_prefix(spark, points_run):
+    """write_stage rebalances a partitioned stage on its partition
+    columns: at test size every gh2 directory of points holds ONE file
+    (not one per write task), still in (gh2, geohash) order with
+    geohash-ordered row groups, and the manifest is what the footers
+    and the lineage say."""
+    import pyarrow.parquet as pq
+
+    ppath = os.path.join(points_run, "points")
+    dirs = _parquet_files(ppath)
+    assert len(dirs) > 10 and all(d.startswith("gh2=") for d in dirs)
+    assert all(len(files) == 1 for files in dirs.values()), dirs
+    for files in dirs.values():
+        pf = pq.ParquetFile(files[0])
+        cells = pf.read(columns=["geohash"]).column(0).to_pylist()
+        assert cells == sorted(cells)
+        gi = pf.schema_arrow.get_field_index("geohash")
+        stats = [pf.metadata.row_group(i).column(gi).statistics
+                 for i in range(pf.metadata.num_row_groups)]
+        assert all(a.max <= b.min for a, b in zip(stats, stats[1:]))
+    m = table.read_manifest(ppath)
+    assert m["partitions"] == table._footer_counts(ppath, ["gh2"])
+    assert m["lineage"] == table.stage_lineage(
+        [os.path.join(points_run, "pages")], {"nchars": pipeline.NCHARS})
+    # the downstream stages scan those few files: joined is written by
+    # one task per read split, a handful instead of one per points file
+    assert len(_parquet_files(os.path.join(points_run, "joined"))["."]) < len(dirs)
+
+
+def test_points_hot_prefix_split_at_small_advisory_size(spark, points_run, tmp_path):
+    """The rebalance splits a hot prefix into files of the advisory
+    partition size instead of funnelling it into one file; rows and
+    per-partition counts do not change."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    wd = str(tmp_path / "wd")
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        pipeline.stage_pages(spark, wd, 3000)
+        pipeline.stage_points(spark, wd)
+    finally:
+        spark.conf.set(key, old)
+    small, base = os.path.join(wd, "points"), os.path.join(points_run, "points")
+    m, m0 = table.read_manifest(small), table.read_manifest(base)
+    hot = max(m["partitions"], key=m["partitions"].get)
+    assert len(_parquet_files(small)[f"gh2={hot}"]) > 1
+    assert m["partitions"] == m0["partitions"] == table._footer_counts(small, ["gh2"])
+    assert m["lineage"] == m0["lineage"]
+
+    def rows(p):
+        return sorted(map(tuple, table.read_stage(spark, p).collect()))
+
+    assert rows(small) == rows(base)
+
+
 def test_bucketed_upsert_has_no_exchange(spark):
     """Co-bucketed storage removes the keyed upsert's wide shuffle:
     both scans report hash partitioning (and sort order) on the key,

@@ -92,7 +92,7 @@ def main() -> None:
     shutil.rmtree(WORKDIR, ignore_errors=True)
     # pipeline's own stage timing (excludes the one-time executor/JIT
     # warm-up, which long-lived cluster executors don't pay per job)
-    pm = pipeline.run_pipeline(spark, WORKDIR, n=N_PAGES, partitions=CPUS * 2)
+    pm = pipeline.run_pipeline(spark, WORKDIR, n=N_PAGES)
     timings["pages_pipeline"] = round(pm["t_total"], 3)
 
     # operator suite on the driver's testdata at SF_DIR: every queries()

@@ -6,10 +6,12 @@ through the manifest layer so a killed run resumes mid-job.
 is the cluster entry; the same function runs in-process for tests and
 bench.  Stage graph (each stage = one manifest-committed table):
 
-  pages      synth_pages (or external ingest)        partition: none
+  pages      synth_pages (or external ingest)        partition: none; one Python
+                                                     task and file per
+                                                     PAGES_PER_TASK pages
   points     extract + mentions explode + cells      partition: gh2 (2-char prefix),
-                                                     rebalanced on gh2: one file per
-                                                     prefix, hot prefixes split
+             (one Python task per PAGES_PER_TASK     rebalanced on gh2: one file per
+             pages)                                  prefix, hot prefixes split
   joined     radius join vs the city POI set         partition: none (result)
   rollup     per-cell counts (salted aggregation)    partition: none
   store      latest point per url via MERGE INTO     external table, 16 buckets on url,
@@ -38,6 +40,21 @@ from . import engine, extract, synth, table
 
 NCHARS = 5  # geohash length of the points stage
 JOIN_RADIUS_M = 50000.0  # radius of the join stage's city queries
+# rows per task of the pages and points Python passes.  Every Python
+# task pays a fixed 0.15-0.29 s (the worker's importlib.invalidate_caches
+# re-reads pyspark.zip and the spark-core jar) before any work; at about
+# 21 us of work per page per pass a full task works about 1.4 s, so the
+# fixed cost stays under a sixth of it.  Measured on 4 cores from 32k to
+# 2M pages, smaller tasks (2^14, 2^15) made run_pipeline 13-21% slower
+# at 2M pages from the extra tasks; this size loses where n is only a
+# few tasks' worth and leaves cores idle (65k pages: one task per pass,
+# 28% slower than 16 tasks)
+PAGES_PER_TASK = 1 << 16
+
+
+def _python_tasks(rows: int) -> int:
+    """Tasks of a Python pass over ``rows`` pages: one per PAGES_PER_TASK."""
+    return max(1, -(-rows // PAGES_PER_TASK))
 
 
 def poi_queries(spark: SparkSession, radius_m: float = JOIN_RADIUS_M) -> DataFrame:
@@ -50,12 +67,13 @@ def stage_pages(spark: SparkSession, workdir: str, n: int, partitions: int | Non
     path = os.path.join(workdir, "pages")
     params = {"n": n}
     if not table.is_complete(path, params=params):
-        # fixed fan-out independent of the session's core count: the
-        # stored table's file/row-group layout (hence every downstream
-        # scan's split balance) must not depend on the parallelism the
-        # ingest happened to run at
+        # one Python task per PAGES_PER_TASK pages: the fan-out depends
+        # on n only, never on the session's core count, so the stored
+        # table's file/row-group layout (hence every downstream scan's
+        # split balance) does not depend on the parallelism the ingest
+        # happened to run at
         if partitions is None:
-            partitions = int(os.environ.get("SPARK_GRAFT_PAGES_PARTITIONS", "16"))
+            partitions = _python_tasks(n)
         df = synth.synth_pages(spark, n, partitions)
         table.write_stage(df, path, parents=(), params=params)
     return path
@@ -116,9 +134,10 @@ def stage_points(spark: SparkSession, workdir: str, nchars: int = NCHARS) -> str
     params = {"nchars": nchars}
     if not table.is_complete(path, parents=[pages_path], params=params):
         pages = table.read_stage(spark, pages_path)
-        # spread the UDF-heavy stage across every core even when the
-        # input collapses into few splits (html compresses well)
-        target = spark.sparkContext.defaultParallelism * 2
+        # one Python task per PAGES_PER_TASK pages, sized from the
+        # manifest (no job); shuffle only when the scan packs the pages
+        # files into fewer splits than that (html compresses well)
+        target = _python_tasks(table.read_manifest(pages_path)["total_rows"])
         if pages.rdd.getNumPartitions() < target:
             pages = pages.repartition(target)
         points = pages.mapInPandas(_points_batches(nchars), schema=POINTS_SCHEMA)

@@ -7,7 +7,9 @@ provides it).  AQE is on so skewed cell joins re-plan at runtime.
 
 from __future__ import annotations
 
+import functools
 import os
+import socket
 
 from pyspark.sql import SparkSession
 
@@ -75,4 +77,53 @@ def get_spark(app: str = "geotile", cores: int | None = None,
         builder = builder.config("spark.local.dir", local_dir)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _prompt_stop(spark.sparkContext)
     return spark
+
+
+class _PromptStop:
+    """Mixed into PySpark's accumulator server so that ``shutdown`` ends
+    the JVM connection's handler at once.
+
+    The server serves that one connection on its own thread, polling it
+    with a 1 s ``select`` until shutdown, and ``shutdown`` waits for the
+    poll to end: every ``spark.stop()`` after a Python task blocked for a
+    uniform 0-1 s.  ``SparkContext.stop`` stops the JVM first, so no
+    update is in flight; closing the connection wakes the poll, whose
+    read then fails on end of file, an error expected at shutdown."""
+
+    _conn = None
+
+    def finish_request(self, request, client_address):
+        self._conn = request
+        super().finish_request(request, client_address)
+
+    def handle_error(self, request, client_address):
+        if not self.server_shutdown:
+            super().handle_error(request, client_address)
+
+    def shutdown(self):
+        self.server_shutdown = True
+        # socketserver's own stop flag, set before the handler wakes:
+        # else the serving loop may start another 0.5 s accept poll
+        self._BaseServer__shutdown_request = True
+        if self._conn is not None:
+            try:
+                self._conn.shutdown(socket.SHUT_RDWR)
+            except OSError:  # the handler has closed it already
+                pass
+        super().shutdown()
+
+
+@functools.cache
+def _prompt_class(cls: type) -> type:
+    return type(f"Prompt{cls.__name__}", (_PromptStop, cls), {})
+
+
+def _prompt_stop(sc) -> None:
+    """Give ``sc``'s accumulator server the prompt ``shutdown`` of
+    _PromptStop.  Before any Python task the JVM has not connected yet,
+    so the connection it opens is the one ``shutdown`` closes."""
+    server = getattr(sc, "_accumulatorServer", None)
+    if server is not None and not isinstance(server, _PromptStop):
+        server.__class__ = _prompt_class(type(server))

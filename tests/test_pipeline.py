@@ -282,10 +282,15 @@ def test_points_one_file_per_prefix(spark, points_run):
     assert len(_parquet_files(os.path.join(points_run, "joined"))["."]) < len(dirs)
 
 
-def test_points_hot_prefix_split_at_small_advisory_size(spark, points_run, tmp_path):
+def test_points_hot_prefix_split_at_small_advisory_size(spark, points_run, tmp_path,
+                                                       monkeypatch):
     """The rebalance splits a hot prefix into files of the advisory
     partition size instead of funnelling it into one file; rows and
-    per-partition counts do not change."""
+    per-partition counts do not change.  AQE splits a hot partition only
+    at map-task boundaries, so at n <= PAGES_PER_TASK (one Python task)
+    a prefix is one file holding at most one task's points: the test
+    sizes the passes at 500 pages per task, 6 map tasks."""
+    monkeypatch.setattr(pipeline, "PAGES_PER_TASK", 500)
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     wd = str(tmp_path / "wd")
     old = spark.conf.get(key)
@@ -306,6 +311,55 @@ def test_points_hot_prefix_split_at_small_advisory_size(spark, points_run, tmp_p
         return sorted(map(tuple, table.read_stage(spark, p).collect()))
 
     assert rows(small) == rows(base)
+
+
+def test_python_passes_sized_by_rows(spark, tmp_path, monkeypatch):
+    """The pages and points Python passes run one task per
+    PAGES_PER_TASK pages, whatever the core count, and the sizing
+    changes neither the rows nor the manifests."""
+    sc = spark.sparkContext
+
+    def run(wd, group):
+        pipeline.stage_pages(spark, wd, 3000)
+        sc.setJobGroup(group, group)
+        try:
+            pipeline.stage_points(spark, wd)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the stages that ran, in order; the write is last and the
+        # Python map stage feeding its rebalance is the one before it
+        st = sc.statusTracker()
+        ids = sorted({s for j in st.getJobIdsForGroup(group)
+                      for s in st.getJobInfo(j).stageIds})
+        ran = [i for i in map(st.getStageInfo, ids) if i and i.numCompletedTasks]
+        return len(_parquet_files(os.path.join(wd, "pages"))["."]), ran[-2].numTasks
+
+    one, three = str(tmp_path / "one"), str(tmp_path / "three")
+    assert run(one, "sized_default") == (1, 1)
+    monkeypatch.setattr(pipeline, "PAGES_PER_TASK", 1000)
+    assert run(three, "sized_1000") == (3, 3)
+
+    def rows(wd):
+        return sorted(map(tuple, table.read_stage(spark, os.path.join(wd, "points")).collect()))
+
+    m1 = table.read_manifest(os.path.join(one, "points"))
+    m3 = table.read_manifest(os.path.join(three, "points"))
+    assert m1["total_rows"] > 0 and m1["partitions"] == m3["partitions"]
+    assert m1["lineage"] == m3["lineage"]
+    assert rows(one) == rows(three)
+
+    # an empty ingest commits empty stages: the pages pass asks for one
+    # task, and stage_points never calls repartition(0), which raises
+    sizes = []
+    synth_pages = synth.synth_pages
+    monkeypatch.setattr(synth, "synth_pages",
+                        lambda s, n, parts: sizes.append(parts) or synth_pages(s, n, parts))
+    empty = str(tmp_path / "empty")
+    pipeline.stage_pages(spark, empty, 0)
+    pipeline.stage_points(spark, empty)
+    assert sizes == [1]
+    assert table.read_manifest(os.path.join(empty, "pages"))["total_rows"] == 0
+    assert table.read_manifest(os.path.join(empty, "points"))["total_rows"] == 0
 
 
 def test_bucketed_upsert_has_no_exchange(spark):

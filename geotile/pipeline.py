@@ -40,11 +40,12 @@ from . import engine, extract, synth, table
 
 NCHARS = 5  # geohash length of the points stage
 JOIN_RADIUS_M = 50000.0  # radius of the join stage's city queries
-# rows per task of the pages and points Python passes.  Every Python
-# task pays a fixed 0.15-0.29 s (the worker's importlib.invalidate_caches
-# re-reads pyspark.zip and the spark-core jar) before any work; at about
-# 21 us of work per page per pass a full task works about 1.4 s, so the
-# fixed cost stays under a sixth of it.  Measured on 4 cores from 32k to
+# rows per task of the pages and points Python passes.  A Python task's
+# importlib.invalidate_caches() costs about 0.0001 s since the workers
+# import pyspark from site-packages (geotile/_daemon.py; 0.09-0.16 s with
+# Spark's zips on the path), but each task still pays the job's JVM and
+# Arrow set-up; at about 21 us of work per page per pass a full task
+# works about 1.4 s.  Measured, before the daemon, on 4 cores from 32k to
 # 2M pages, smaller tasks (2^14, 2^15) made run_pipeline 13-21% slower
 # at 2M pages from the extra tasks; this size loses where n is only a
 # few tasks' worth and leaves cores idle (65k pages: one task per pass,
@@ -63,7 +64,7 @@ def poi_queries(spark: SparkSession, radius_m: float = JOIN_RADIUS_M) -> DataFra
         rows, "query_id long, poi string, qlat double, qlon double, radius_m double")
 
 
-def stage_pages(spark: SparkSession, workdir: str, n: int, partitions: int | None = None) -> str:
+def stage_pages(spark: SparkSession, workdir: str, n: int) -> str:
     path = os.path.join(workdir, "pages")
     params = {"n": n}
     if not table.is_complete(path, params=params):
@@ -72,9 +73,7 @@ def stage_pages(spark: SparkSession, workdir: str, n: int, partitions: int | Non
         # table's file/row-group layout (hence every downstream scan's
         # split balance) does not depend on the parallelism the ingest
         # happened to run at
-        if partitions is None:
-            partitions = _python_tasks(n)
-        df = synth.synth_pages(spark, n, partitions)
+        df = synth.synth_pages(spark, n, _python_tasks(n))
         table.write_stage(df, path, parents=(), params=params)
     return path
 
@@ -273,9 +272,11 @@ def warm_up(spark: SparkSession, workdir: str | None = None) -> None:
     """Pre-fork the Python UDF workers at full parallelism and JIT-warm
     the codegen/parquet/broadcast paths with a micro dry run.  On a real
     cluster executors (and their python daemons) are long-lived and the
-    JVM is hot; in a fresh local JVM the first pandas stage pays ~0.5 s
-    per worker fork and the first join/write pays seconds of JIT and
-    codegen compilation, which pollutes scaling measurements."""
+    JVM is hot; in a fresh local JVM the first pandas stage pays the
+    Python daemon's start once per session (its workers fork with pyspark
+    already imported, from site-packages: geotile/_daemon.py) and the
+    first join/write pays seconds of JIT and codegen compilation, which
+    pollutes scaling measurements."""
     p = spark.sparkContext.defaultParallelism
     spark.range(0, p, 1, p).mapInPandas(lambda it: it, schema="id bigint").count()
     if workdir is not None:
@@ -307,8 +308,7 @@ def _all_committed(workdir: str, n: int) -> bool:
             and _committed_store(workdir) is not None)
 
 
-def run_pipeline(spark: SparkSession, workdir: str, n: int,
-                 partitions: int | None = None) -> dict:
+def run_pipeline(spark: SparkSession, workdir: str, n: int) -> dict:
     """Run (or resume) all stages; returns row counts and timings.
 
     ``joined`` and ``rollup`` are independent consumers of ``points``,
@@ -325,7 +325,7 @@ def run_pipeline(spark: SparkSession, workdir: str, n: int,
     if not resumed:
         warm_up(spark, workdir)
     t0 = time.time()
-    stage_pages(spark, workdir, n, partitions)
+    stage_pages(spark, workdir, n)
     t1 = time.time()
     stage_points(spark, workdir)
     t2 = time.time()

@@ -32,18 +32,21 @@ def get_spark(app: str = "geotile", cores: int | None = None,
     # spark.master JVM system property, visible through SparkConf) >
     # local[cores] fallback.  Calling .master() unconditionally would
     # override spark-submit and trap the engine in local mode.
-    master_env = os.environ.get("SPARK_GRAFT_MASTER")
-    if master_env:
-        builder = builder.master(master_env)
+    master = os.environ.get("SPARK_GRAFT_MASTER")
+    if master:
+        builder = builder.master(master)
     else:
         try:
             from pyspark import SparkConf
 
-            has_master = SparkConf().contains("spark.master")
+            master = SparkConf().get("spark.master", None)
         except Exception:
-            has_master = False
-        if not has_master:
-            builder = builder.master(f"local[{cores}]")
+            master = None
+        if master is None:
+            master = f"local[{cores}]"
+            builder = builder.master(master)
+    for key, value in _daemon_conf(master).items():
+        builder = builder.config(key, value)
     builder = (
         builder
         .appName(app)
@@ -79,6 +82,24 @@ def get_spark(app: str = "geotile", cores: int | None = None,
     spark.sparkContext.setLogLevel("WARN")
     _prompt_stop(spark.sparkContext)
     return spark
+
+
+def _daemon_conf(master: str) -> dict:
+    """Start the Python workers through ``geotile._daemon`` (pyspark from
+    site-packages, not Spark's zips) where the worker can import it before
+    its first task: a ``local`` master and geotile imported from a
+    directory, whose parent the workers get on ``PYTHONPATH``.  Anywhere
+    else (a cluster, or ``--py-files geotile.zip``, which ships geotile
+    only per task) PySpark's own daemon runs."""
+    here = os.path.abspath(__file__)
+    if not (master == "local" or master.startswith("local[")) or not os.path.isfile(here):
+        return {}
+    conf = {"spark.python.daemon.module": "geotile._daemon"}
+    root = os.path.dirname(os.path.dirname(here))
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if root not in {os.path.abspath(p) for p in paths if p}:
+        conf["spark.executorEnv.PYTHONPATH"] = root
+    return conf
 
 
 class _PromptStop:

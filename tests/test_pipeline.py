@@ -73,11 +73,12 @@ def test_manifest_write_resume(spark, tmp_path):
     assert table.verify_counts(spark, p)
 
 
-def test_pipeline_end_to_end_and_resume(spark, tmp_path):
+def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
     import hashlib
 
+    monkeypatch.setattr(pipeline, "PAGES_PER_TASK", 500)  # 4 pages tasks
     wd = str(tmp_path)
-    m = pipeline.run_pipeline(spark, wd, n=2000, partitions=4)
+    m = pipeline.run_pipeline(spark, wd, n=2000)
     assert m["pages"] == 2000
     assert m["points"] > 1000  # ~70% of pages have >=1 mention
     assert m["joined"] > 0
@@ -96,7 +97,7 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     mtime_points = os.path.getmtime(os.path.join(wd, "points", table.MANIFEST))
     mtime_store = os.path.getmtime(os.path.join(wd, "store", table.MANIFEST))
     os.remove(os.path.join(wd, "joined", table.MANIFEST))
-    m2 = pipeline.run_pipeline(spark, wd, n=2000, partitions=4)
+    m2 = pipeline.run_pipeline(spark, wd, n=2000)
     assert m2["pages"] == m["pages"] and m2["joined"] == m["joined"]
     assert os.path.getmtime(os.path.join(wd, "points", table.MANIFEST)) == mtime_points
     # completed stages were skipped (fast) — including the MERGE store
@@ -108,7 +109,7 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     # store manifest -> the next pipeline run self-heals and recommits
     spark.sql(f"ALTER TABLE {store_name} RENAME TO {store_name}__merge_stage")
     os.remove(os.path.join(wd, "store", table.MANIFEST))
-    m3 = pipeline.run_pipeline(spark, wd, n=2000, partitions=4)
+    m3 = pipeline.run_pipeline(spark, wd, n=2000)
     assert m3["store"] == n_urls
     assert spark.table(store_name).count() == n_urls
     assert not spark.catalog.tableExists(f"{store_name}__merge_stage")
@@ -120,19 +121,20 @@ def _store_files(wd):
             for d, _dirs, fs in os.walk(root) for f in fs}
 
 
-def test_store_cold_catalog_reattaches_without_rebuild(spark, tmp_path):
+def test_store_cold_catalog_reattaches_without_rebuild(spark, tmp_path, monkeypatch):
     """A committed workdir is the whole state: with only the catalog
     entry gone (a new session), the rerun re-registers the external
     bucketed store from its manifest, rewrites nothing, and the
     re-attached table still plans the keyed merge without a shuffle."""
+    monkeypatch.setattr(pipeline, "PAGES_PER_TASK", 500)  # 4 pages tasks
     wd = str(tmp_path / "wd")
-    m = pipeline.run_pipeline(spark, wd, n=2000, partitions=4)
+    m = pipeline.run_pipeline(spark, wd, n=2000)
     assert m["resumed"] is False and m["pages_per_sec"] > 0
     name = pipeline._store_name(wd)
     before = _store_files(wd)
     spark.sql(f"DROP TABLE {name}")
     assert not spark.catalog.tableExists(name)
-    m2 = pipeline.run_pipeline(spark, wd, n=2000, partitions=4)
+    m2 = pipeline.run_pipeline(spark, wd, n=2000)
     assert _store_files(wd) == before  # data files and manifest untouched
     assert m2["resumed"] is True and m2["pages_per_sec"] is None
     assert m2["t_store"] < 0.5
@@ -160,15 +162,16 @@ def test_store_cold_catalog_reattaches_without_rebuild(spark, tmp_path):
     assert not [d for d in stray if d.startswith(name)], stray
 
 
-def test_store_lost_data_rebuilds(spark, tmp_path):
+def test_store_lost_data_rebuilds(spark, tmp_path, monkeypatch):
     """A manifest without its data directory is not a committed store:
     the rerun rebuilds it (right count, data on disk again) instead of
     re-registering a missing location."""
+    monkeypatch.setattr(pipeline, "PAGES_PER_TASK", 500)  # 4 pages tasks
     wd = str(tmp_path / "wd")
-    m = pipeline.run_pipeline(spark, wd, n=2000, partitions=4)
+    m = pipeline.run_pipeline(spark, wd, n=2000)
     manifest = table.read_manifest(os.path.join(wd, "store"))
     shutil.rmtree(manifest["location"])
-    m2 = pipeline.run_pipeline(spark, wd, n=2000, partitions=4)
+    m2 = pipeline.run_pipeline(spark, wd, n=2000)
     assert m2["resumed"] is False and m2["store"] == m["store"]
     rebuilt = table.read_manifest(os.path.join(wd, "store"))
     assert os.path.isdir(rebuilt["location"])
@@ -178,12 +181,14 @@ def test_store_lost_data_rebuilds(spark, tmp_path):
         == [os.path.basename(rebuilt["location"])]
 
 
-def test_join_rows_identical_across_parallelism(spark, tmp_path):
+def test_join_rows_identical_across_parallelism(spark, tmp_path, monkeypatch):
     """North-rule scaling-correctness: identical join output rows at
     different parallelism (same session, different shuffle partitioning)."""
     wd1, wd2 = str(tmp_path / "a"), str(tmp_path / "b")
-    pipeline.run_pipeline(spark, wd1, n=1500, partitions=2)
-    pipeline.run_pipeline(spark, wd2, n=1500, partitions=11)
+    monkeypatch.setattr(pipeline, "PAGES_PER_TASK", 750)  # 2 pages tasks
+    pipeline.run_pipeline(spark, wd1, n=1500)
+    monkeypatch.setattr(pipeline, "PAGES_PER_TASK", 137)  # 11 pages tasks
+    pipeline.run_pipeline(spark, wd2, n=1500)
     j1 = table.read_stage(spark, os.path.join(wd1, "joined"))
     j2 = table.read_stage(spark, os.path.join(wd2, "joined"))
     a = sorted(tuple(r) for r in j1.collect())
@@ -194,8 +199,9 @@ def test_join_rows_identical_across_parallelism(spark, tmp_path):
 def test_compact_preserves_content_and_lineage(spark, tmp_path, monkeypatch):
     from pyspark.sql import functions as F
 
+    monkeypatch.setattr(pipeline, "PAGES_PER_TASK", 500)  # 6 pages tasks
     wd = str(tmp_path / "wd")
-    pipeline.run_pipeline(spark, wd, n=3000, partitions=6)
+    pipeline.run_pipeline(spark, wd, n=3000)
     ppath = os.path.join(wd, "points")
     before = {tuple(r) for r in table.read_stage(spark, ppath)
               .select("url", "geohash").collect()}

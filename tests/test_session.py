@@ -7,6 +7,7 @@ fresh subprocesses (master is fixed at JVM launch, so the running test
 session can't be reused).
 """
 
+import os
 import subprocess
 import sys
 
@@ -103,3 +104,105 @@ def test_stop_after_python_task_is_prompt():
                          text=True, timeout=180)
     assert out.returncode == 0, out.stderr[-2000:]
     assert "Exception occurred during processing of request" not in out.stderr
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# prints the daemon module of a local[2] session and the pyspark file a
+# Python task of it imported
+_TASK_PYSPARK = (
+    "import sys\n"
+    "sys.path.insert(0, sys.argv[1])\n"
+    "from geotile.session import get_spark\n"
+    "s = get_spark('t', cores=2)\n"
+    "def f(it):\n"
+    "    import pyspark\n"
+    "    for b in it:\n"
+    "        yield b.assign(f=pyspark.__file__)\n"
+    "r = s.range(0, 2, 1, 2).mapInPandas(f, 'id bigint, f string').collect()\n"
+    "print('DAEMON=' + str(s.conf.get('spark.python.daemon.module', None)))\n"
+    "print('PYSPARK=' + ','.join(sorted({x.f for x in r})))\n"
+    "s.stop()\n")
+
+
+def _task_pyspark(root: str, cwd: str, env: dict) -> tuple[str, str]:
+    out = subprocess.run([sys.executable, "-c", _TASK_PYSPARK, root], capture_output=True,
+                         text=True, timeout=180, cwd=cwd, env=env)
+    assert out.returncode == 0, out.stderr[-2000:]
+    lines = dict(ln.split("=", 1) for ln in out.stdout.splitlines() if "=" in ln)
+    return lines["DAEMON"], lines["PYSPARK"]
+
+
+def test_workers_import_pyspark_from_site_packages():
+    """When site-packages holds the zip's pyspark, the workers of a local
+    session import it from there: their ``importlib.invalidate_caches()``
+    then re-reads no archive."""
+    import pyspark
+
+    daemon, worker = _task_pyspark(REPO, REPO, dict(os.environ))
+    assert daemon == "geotile._daemon"
+    assert worker == pyspark.__file__ and ".zip" not in worker
+
+
+def test_workers_find_geotile_from_driver_path_only(tmp_path):
+    """A driver that put geotile on its own ``sys.path`` only (as
+    conftest.py does), run from outside the repo with no ``PYTHONPATH``,
+    still starts its workers through ``geotile._daemon``."""
+    import pyspark
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    daemon, worker = _task_pyspark(REPO, str(tmp_path), env)
+    assert daemon == "geotile._daemon" and worker == pyspark.__file__
+
+
+def test_zipped_geotile_keeps_pyspark_daemon(tmp_path):
+    """A geotile imported from a zip (``--py-files``) cannot start the
+    daemon before its first task: PySpark's own daemon runs, with
+    pyspark from Spark's zip."""
+    import zipfile
+
+    with zipfile.ZipFile(tmp_path / "geotile.zip", "w") as z:
+        for name in os.listdir(os.path.join(REPO, "geotile")):
+            if name.endswith(".py"):
+                z.write(os.path.join(REPO, "geotile", name), "geotile/" + name)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    daemon, worker = _task_pyspark(str(tmp_path / "geotile.zip"), str(tmp_path), env)
+    assert daemon == "None"
+    assert "pyspark.zip" in worker
+
+
+def test_daemon_only_on_local_masters():
+    from geotile.session import _daemon_conf
+
+    assert _daemon_conf("local[2]")["spark.python.daemon.module"] == "geotile._daemon"
+    assert _daemon_conf("local")["spark.python.daemon.module"] == "geotile._daemon"
+    for master in ("yarn", "spark://host:7077", "k8s://host:443", "local-cluster[2,1,1024]"):
+        assert _daemon_conf(master) == {}, master
+
+
+def test_daemon_keeps_zip_of_another_pyspark(tmp_path):
+    """``drop_spark_archives`` takes Spark's archives off the path only
+    when the zip's ``pyspark/version.py`` is site-packages'; with
+    another version the path and the zip's pyspark stay."""
+    import zipfile
+
+    import pyspark
+
+    ours = open(os.path.join(os.path.dirname(pyspark.__file__), "version.py")).read()
+    code = (
+        f"import sys; sys.path.insert(0, {REPO!r})\n"
+        "from geotile._daemon import drop_spark_archives\n"
+        "before = list(sys.path)\n"
+        "dropped = drop_spark_archives(sys.path)\n"
+        "import pyspark\n"
+        "print(dropped, sys.path == before, pyspark.__file__)\n")
+    out = {}
+    for name, version in (("same", ours), ("other", '__version__ = "0.0.1"\n')):
+        zpath = tmp_path / name / "pyspark.zip"
+        zpath.parent.mkdir()
+        with zipfile.ZipFile(zpath, "w") as z:
+            z.writestr("pyspark/__init__.py", "")
+            z.writestr("pyspark/version.py", version)
+        out[name] = _probe({"PYTHONPATH": str(zpath)}, code).split()
+    assert out["same"] == ["True", "False", pyspark.__file__]
+    assert out["other"] == ["False", "True", str(zpath / "pyspark" / "__init__.py")]

@@ -6,7 +6,9 @@ criterion is evidenced by running the IDENTICAL pages pipeline at
 local[8] and local[32] on the same input size and reporting throughput
 at both plus the scaling efficiency.  Each run is a fresh JVM
 (subprocess) with a fresh workdir; timing comes from inside the
-pipeline (excludes session startup).
+pipeline: it excludes session startup but includes the cold session's
+first-run JIT/codegen compilation and Python worker start, which no
+dry run pays ahead of the clock.
 
 Writes BENCH/BASELINE.md and prints one JSON line.
 """

@@ -88,12 +88,15 @@ def main() -> None:
 
     timings: dict[str, float] = {}
 
-    # headline: full pages pipeline (fresh workdir each run)
+    # headline: full pages pipeline (fresh workdir each run), timed by
+    # the pipeline itself.  The first run is the cold session's: it
+    # includes JIT/codegen compilation and the Python workers' start.
+    # A second run on a fresh workdir in the same session is reported
+    # beside it, outside ``queries``
     shutil.rmtree(WORKDIR, ignore_errors=True)
-    # pipeline's own stage timing (excludes the one-time executor/JIT
-    # warm-up, which long-lived cluster executors don't pay per job)
     pm = pipeline.run_pipeline(spark, WORKDIR, n=N_PAGES)
     timings["pages_pipeline"] = round(pm["t_total"], 3)
+    pm_repeat = pipeline.run_pipeline(spark, os.path.join(WORKDIR, "repeat"), n=N_PAGES)
 
     # operator suite on the driver's testdata at SF_DIR: every queries()
     # entry except BENCH_SKIP, in query-number order
@@ -280,6 +283,8 @@ def main() -> None:
         "points": pm["points"],
         "joined_rows": pm["joined"],
         "pages_per_sec": round(pm["pages_per_sec"], 1),
+        "pages_pipeline_repeat_sec": round(pm_repeat["t_total"], 3),
+        "pages_per_sec_repeat": round(pm_repeat["pages_per_sec"], 1),
         "stream_updates": n_stream,
         "stream_rows_per_sec": stream_rows_per_sec,
         "skew_docs": n_skew,

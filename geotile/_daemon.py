@@ -7,10 +7,10 @@ directory of an archive once for each of its import paths: with
 pyspark imported from ``pyspark.zip``, once per package imported from
 it, 0.13-0.16 s per task on 4 cores.  When site-packages holds the same
 pyspark (its ``version.py`` matches the zip's) and a py4j, the daemon
-takes Spark's pyspark and py4j zips and its jars (which hold no Python)
-off ``sys.path`` before it imports pyspark, and the workers it forks
-inherit that import.  Otherwise it leaves the path alone and is
-PySpark's own daemon.  ``session.get_spark`` starts it through
+takes Spark's pyspark and py4j zips and the jars under ``SPARK_HOME``
+(which hold no Python) off ``sys.path`` before it imports pyspark, and
+the workers it forks inherit that import.  Otherwise it leaves the path
+alone and is PySpark's own daemon.  ``session.get_spark`` starts it through
 ``spark.python.daemon.module``.
 """
 
@@ -22,7 +22,12 @@ from importlib.machinery import PathFinder
 
 def _spark_archive(entry: str) -> bool:
     name = os.path.basename(entry)
-    return name.endswith(".jar") or (name.endswith(".zip") and name.startswith(("pyspark", "py4j")))
+    if name.endswith(".jar"):
+        # a user's jar stays; SPARK_HOME may be a symlink to the jars' tree
+        home = os.environ.get("SPARK_HOME")
+        return home is not None and os.path.realpath(entry).startswith(
+            os.path.realpath(home) + os.sep)
+    return name.endswith(".zip") and name.startswith(("pyspark", "py4j"))
 
 
 def _zip_version(z: str) -> bytes | None:

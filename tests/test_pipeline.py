@@ -115,6 +115,23 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
     assert not spark.catalog.tableExists(f"{store_name}__merge_stage")
 
 
+def test_fresh_run_pipeline_runs_no_dry_run(spark, tmp_path, monkeypatch):
+    """A fresh run synthesizes its pages once, for its own pages stage:
+    no dry run of the pipeline comes before the timed stages."""
+    calls = []
+    synth_pages = synth.synth_pages
+
+    def counted(spark, n, *a, **kw):
+        calls.append(n)
+        return synth_pages(spark, n, *a, **kw)
+
+    monkeypatch.setattr(synth, "synth_pages", counted)
+    monkeypatch.setattr(pipeline, "PAGES_PER_TASK", 500)  # 2 pages tasks
+    m = pipeline.run_pipeline(spark, str(tmp_path), n=1000)
+    assert calls == [1000]
+    assert m["pages"] == 1000 and m["resumed"] is False
+
+
 def _store_files(wd):
     root = os.path.join(wd, "store")
     return {os.path.relpath(os.path.join(d, f), root): os.path.getmtime(os.path.join(d, f))

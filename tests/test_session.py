@@ -108,20 +108,24 @@ def test_stop_after_python_task_is_prompt():
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# prints the daemon module of a local[2] session and the pyspark file a
-# Python task of it imported
+# prints the daemon module of a local[2] session, the pyspark file a
+# Python task of it imported and the task's sys.path entries under
+# SPARK_HOME
 _TASK_PYSPARK = (
     "import sys\n"
     "sys.path.insert(0, sys.argv[1])\n"
     "from geotile.session import get_spark\n"
     "s = get_spark('t', cores=2)\n"
     "def f(it):\n"
-    "    import pyspark\n"
+    "    import os, pyspark\n"
+    "    home = os.path.realpath(os.environ['SPARK_HOME']) + os.sep\n"
+    "    left = ';'.join(p for p in sys.path if os.path.realpath(p).startswith(home))\n"
     "    for b in it:\n"
-    "        yield b.assign(f=pyspark.__file__)\n"
-    "r = s.range(0, 2, 1, 2).mapInPandas(f, 'id bigint, f string').collect()\n"
+    "        yield b.assign(f=pyspark.__file__, left=left)\n"
+    "r = s.range(0, 2, 1, 2).mapInPandas(f, 'id bigint, f string, left string').collect()\n"
     "print('DAEMON=' + str(s.conf.get('spark.python.daemon.module', None)))\n"
     "print('PYSPARK=' + ','.join(sorted({x.f for x in r})))\n"
+    "print('LEFT=' + ';'.join(sorted({x.left for x in r} - {''})))\n"
     "s.stop()\n")
 
 
@@ -130,6 +134,10 @@ def _task_pyspark(root: str, cwd: str, env: dict) -> tuple[str, str]:
                          text=True, timeout=180, cwd=cwd, env=env)
     assert out.returncode == 0, out.stderr[-2000:]
     lines = dict(ln.split("=", 1) for ln in out.stdout.splitlines() if "=" in ln)
+    if lines["DAEMON"] == "geotile._daemon":
+        # Spark's own zips and jar are gone, or every task's
+        # invalidate_caches() re-reads them
+        assert lines["LEFT"] == "", lines["LEFT"]
     return lines["DAEMON"], lines["PYSPARK"]
 
 
@@ -183,19 +191,23 @@ def test_daemon_only_on_local_masters():
 def test_daemon_keeps_zip_of_another_pyspark(tmp_path):
     """``drop_spark_archives`` takes Spark's archives off the path only
     when the zip's ``pyspark/version.py`` is site-packages'; with
-    another version the path and the zip's pyspark stay."""
+    another version the path and the zip's pyspark stay.  A user's jar
+    outside ``SPARK_HOME`` stays either way."""
     import zipfile
 
     import pyspark
 
     ours = open(os.path.join(os.path.dirname(pyspark.__file__), "version.py")).read()
+    jar = tmp_path / "user.jar"
+    with zipfile.ZipFile(jar, "w") as z:
+        z.writestr("META-INF/MANIFEST.MF", "Manifest-Version: 1.0\n")
     code = (
         f"import sys; sys.path.insert(0, {REPO!r})\n"
         "from geotile._daemon import drop_spark_archives\n"
         "before = list(sys.path)\n"
         "dropped = drop_spark_archives(sys.path)\n"
         "import pyspark\n"
-        "print(dropped, sys.path == before, pyspark.__file__)\n")
+        f"print(dropped, sys.path == before, pyspark.__file__, {str(jar)!r} in sys.path)\n")
     out = {}
     for name, version in (("same", ours), ("other", '__version__ = "0.0.1"\n')):
         zpath = tmp_path / name / "pyspark.zip"
@@ -203,6 +215,7 @@ def test_daemon_keeps_zip_of_another_pyspark(tmp_path):
         with zipfile.ZipFile(zpath, "w") as z:
             z.writestr("pyspark/__init__.py", "")
             z.writestr("pyspark/version.py", version)
-        out[name] = _probe({"PYTHONPATH": str(zpath)}, code).split()
-    assert out["same"] == ["True", "False", pyspark.__file__]
-    assert out["other"] == ["False", "True", str(zpath / "pyspark" / "__init__.py")]
+        out[name] = _probe({"PYTHONPATH": os.pathsep.join([str(zpath), str(jar)])},
+                           code).split()
+    assert out["same"] == ["True", "False", pyspark.__file__, "True"]
+    assert out["other"] == ["False", "True", str(zpath / "pyspark" / "__init__.py"), "True"]

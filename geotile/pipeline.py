@@ -14,7 +14,7 @@ bench.  Stage graph (each stage = one manifest-committed table):
              pages)                                  prefix, hot prefixes split
   joined     radius join vs the city POI set         partition: none (result)
   rollup     per-cell counts (salted aggregation)    partition: none
-  store      latest point per url via MERGE INTO     external table, 16 buckets on url,
+  store      latest point per url (LWW dedup)        external table, 16 buckets on url,
                                                      data under store/data.v<N>
 
 At 100 TB the 'points' table is the big one; it is written partitioned
@@ -197,18 +197,11 @@ def _committed_store(workdir: str) -> dict | None:
 
 
 def stage_store(spark: SparkSession, workdir: str) -> str:
-    """Keyed positions STORE maintained through the production MERGE
-    API (table.merge_into): the latest mention per url, LWW on
-    (warc_ts, payload), lands in a bucketed catalog table — the AddPos
-    upsert surface (SURVEY.md S1) exercised inside the resumable
-    pipeline rather than only in unit tests.
-
-    Shape: the points stage splits into two deterministic micro-batches
-    by xxhash64(url) parity — batch 0 SEEDS the store (bucketed write),
-    batch 1 arrives through ``MERGE INTO`` (v2 catalog) or the
-    zero-Exchange bucketed merge-join fallback, so every fresh run
-    exercises both the create and the incremental-merge path, exactly
-    how a daily crawl lands on the store at cluster scale.
+    """Keyed positions STORE: the latest mention per url, LWW on
+    (warc_ts, payload) through :func:`table.lww_dedup`, lands in a
+    bucketed catalog table — the AddPos upsert surface (SURVEY.md S1)
+    built inside the resumable pipeline.  One dedup shuffle on url and
+    one bucketed write.
 
     Storage: the catalog table ``geotile_store_<hash of workdir>`` is
     EXTERNAL, 16 buckets on url sorted by url, and every version of its
@@ -222,9 +215,9 @@ def stage_store(spark: SparkSession, workdir: str) -> str:
     exists, the stage is skipped; if the catalog lacks the table (a new
     session) or points elsewhere, the table is re-registered from the
     manifest (metadata only, no job), not rebuilt.  A missing data
-    directory rebuilds the store.  A crash between merge_into's DROP
-    and RENAME is repaired by recover_merge on the next entry
-    (tested)."""
+    directory rebuilds the store.  A store left under its merge-stage
+    name by an interrupted :func:`table.merge_into` is renamed back by
+    recover_merge on entry (tested)."""
     import shutil
 
     points_path = os.path.join(workdir, "points")
@@ -238,21 +231,11 @@ def stage_store(spark: SparkSession, workdir: str) -> str:
         return path
     table.recover_merge(spark, name)
     points = table.read_stage(spark, points_path)
-    upd = points.select(
-        "url", F.col("warc_ts").alias("ts"), "lat", "lon", "geohash",
-        F.pmod(F.xxhash64("url"), F.lit(2)).alias("_b"))
-    seed = upd.where(F.col("_b") == 0).drop("_b")
-    # LWW-dedup the seed batch exactly as merge_into dedups updates
-    from pyspark.sql import Window
-
-    tie = [F.col(c).desc() for c in seed.columns if c not in ("url", "ts")]
-    w = Window.partitionBy("url").orderBy(F.col("ts").desc(), *tie)
-    seed = (seed.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1).drop("_rn"))
-    table.write_bucketed(seed, name, STORE_KEY, STORE_BUCKETS,
+    latest = table.lww_dedup(
+        points.select("url", F.col("warc_ts").alias("ts"), "lat", "lon", "geohash"),
+        STORE_KEY, "ts")
+    table.write_bucketed(latest, name, STORE_KEY, STORE_BUCKETS,
                          path=table.next_version(os.path.join(path, "data")))
-    table.merge_into(spark, name, upd.where(F.col("_b") == 1).drop("_b"),
-                     key=STORE_KEY, ts="ts", n_buckets=STORE_BUCKETS)
     loc = table.table_location(spark, name)
     params = {"table": name}
     table.commit_manifest(path, {
@@ -316,7 +299,6 @@ def run_pipeline(spark: SparkSession, workdir: str, n: int) -> dict:
         d_join = f_join.result()
         d_rollup = f_rollup.result()
     t4 = time.time()
-    # keyed positions store via the production MERGE path
     stage_store(spark, workdir)
     t5 = time.time()
     # a stage that ran committed a new manifest (a new committed_at)

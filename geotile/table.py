@@ -252,6 +252,20 @@ def next_version(path: str) -> str:
     return os.path.join(parent, f"{stem}.v{max(taken, default=0) + 1}")
 
 
+def lww_dedup(df: DataFrame, key: str, ts: str) -> DataFrame:
+    """One row per ``key``, last write wins: the newest ``ts`` survives,
+    and ``ts`` ties break by a TOTAL order over the payload columns,
+    each descending (ordering by ``ts`` alone would make the surviving
+    row depend on scan order).  One window over ``key``: a single
+    shuffle on it."""
+    from pyspark.sql import Window
+
+    tie = [F.col(c).desc() for c in df.columns if c not in (key, ts)]
+    w = Window.partitionBy(key).orderBy(F.col(ts).desc(), *tie)
+    return (df.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1).drop("_rn"))
+
+
 def merge_into(spark: SparkSession, target: str, updates: DataFrame,
                key: str = "msisdn", ts: str = "ts",
                n_buckets: int = 16) -> dict:
@@ -276,13 +290,14 @@ def merge_into(spark: SparkSession, target: str, updates: DataFrame,
     (session warehouse).  An EXTERNAL target's rewrite goes to a fresh
     versioned directory beside its location (:func:`next_version`), so
     its data never moves into the warehouse; the replaced directory is
-    left in place for the caller, whose own commit point (a stage
-    manifest, for pipeline.stage_store) decides when it may go.
+    left in place for the caller, whose own commit point (a manifest,
+    say) decides when it may go.
 
     Raw updates may carry several rows per key (the normal AddPos batch
-    shape): they are LWW-deduped here first, because BOTH downstream
-    forms require a key-unique source — the join form would emit
-    duplicate keys, and a v2 MERGE raises a cardinality violation.
+    shape): they are LWW-deduped here first (:func:`lww_dedup`),
+    because BOTH downstream forms require a key-unique source — the
+    join form would emit duplicate keys, and a v2 MERGE raises a
+    cardinality violation.
 
     The fallback's DROP + RENAME pair is not atomic; a crash between
     the two statements leaves the data under ``{target}__merge_stage``.
@@ -292,19 +307,10 @@ def merge_into(spark: SparkSession, target: str, updates: DataFrame,
 
     Returns ``{"path": "merge-sql" | "merge-join", "plan": <physical
     plan of the merge computation, for plan assertions>}``."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from . import engine
 
     recover_merge(spark, target)
-    # LWW-dedup the raw updates: newest ts per key survives, and ts
-    # ties break by a TOTAL order over the payload columns (ordering by
-    # ts alone would make the committed row depend on scan order)
-    tie = [F.col(c).desc() for c in updates.columns if c not in (key, ts)]
-    w = Window.partitionBy(key).orderBy(F.col(ts).desc(), *tie)
-    updates = (updates.withColumn("_rn", F.row_number().over(w))
-               .where(F.col("_rn") == 1).drop("_rn"))
+    updates = lww_dedup(updates, key, ts)
     upd_view = "_geotile_merge_updates_" + "".join(
         ch if ch.isalnum() else "_" for ch in target)
     updates.createOrReplaceTempView(upd_view)

@@ -85,7 +85,7 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
     for stage in ("pages", "points", "joined", "rollup"):
         assert table.verify_counts(spark, os.path.join(wd, stage))
 
-    # the MERGE-maintained store holds exactly one row per distinct url
+    # the store holds exactly one row per distinct url
     store_name = "geotile_store_" + hashlib.sha256(
         os.path.abspath(wd).encode()).hexdigest()[:10]
     pts = table.read_stage(spark, os.path.join(wd, "points"))
@@ -100,7 +100,7 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
     m2 = pipeline.run_pipeline(spark, wd, n=2000)
     assert m2["pages"] == m["pages"] and m2["joined"] == m["joined"]
     assert os.path.getmtime(os.path.join(wd, "points", table.MANIFEST)) == mtime_points
-    # completed stages were skipped (fast) — including the MERGE store
+    # completed stages were skipped (fast) — including the store
     assert os.path.getmtime(os.path.join(wd, "store", table.MANIFEST)) == mtime_store
     assert m2["t_pages"] < 1.0 and m2["t_points"] < 1.0 and m2["t_store"] < 1.0
 
@@ -113,6 +113,27 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
     assert m3["store"] == n_urls
     assert spark.table(store_name).count() == n_urls
     assert not spark.catalog.tableExists(f"{store_name}__merge_stage")
+
+
+def test_store_holds_latest_point_per_url(spark, tmp_path, monkeypatch):
+    """The store keeps, per url, the point with the greatest warc_ts,
+    ties broken by the greatest (lat, lon, geohash): row for row equal
+    to that pick made in pandas from the points stage."""
+    monkeypatch.setattr(pipeline, "PAGES_PER_TASK", 500)  # 4 pages tasks
+    wd = str(tmp_path)
+    pipeline.run_pipeline(spark, wd, n=2000)
+    pts = (table.read_stage(spark, os.path.join(wd, "points"))
+           .select("url", F.col("warc_ts").alias("ts"), "lat", "lon", "geohash")
+           .toPandas())
+    # a page with several mentions gives one url several points of the
+    # same warc_ts, so the tie-break decides some rows
+    assert pts.groupby(["url", "ts"]).size().max() >= 2
+    cols = ["url", "ts", "lat", "lon", "geohash"]
+    want = (pts.sort_values(cols, ascending=[True, False, False, False, False])
+            .drop_duplicates("url").reset_index(drop=True))
+    got = (spark.table(pipeline._store_name(wd)).toPandas()
+           .sort_values("url").reset_index(drop=True))
+    pd.testing.assert_frame_equal(got[cols], want)
 
 
 def test_fresh_run_pipeline_runs_no_dry_run(spark, tmp_path, monkeypatch):
